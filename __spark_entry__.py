@@ -3399,15 +3399,9 @@ def q_bpe_fertility(spark, sf_dir):
 
 
 def _trade_louvain1(spark, sf_dir):
-    """The Louvain level-1 assignment (iters=4) over the trade graph —
-    `q_louvain` returns it and `q_louvain_levels` injects it as the
-    first level of the multi-level pipeline (graph.louvain's
-    ``level1=`` seam). Computed FRESH per call: the round-11 build
-    session's (session, sf_dir) memo let bench reps of BOTH queries
-    reuse one materialized assignment instead of computing from
-    parquet, which the optimization round's no-cross-run-caching rule
-    forbids. The ``level1=`` parameter stays a library feature for
-    callers that legitimately hold a precomputed assignment."""
+    """The Louvain level-1 assignment (iters=4) over the trade graph,
+    returned by `q_louvain`. Computed FRESH per call: bench reps must
+    not reuse a materialized assignment (no cross-run caching)."""
     from simba_spark.operators.graph import louvain_moves
 
     # no trailing checkpoint: q_louvain's sink is the single consumer,
@@ -3435,14 +3429,7 @@ def q_louvain_levels(spark, sf_dir):
     best level by an EXACT integer modularity score (4m·W_in − Σd_c²,
     HUGEINT/decimal both engines), so Q >= the one-level q_louvain row
     by construction. Level 2 runs on the contracted graph — one node
-    per level-1 community. Level 1 is computed INSIDE ``louvain`` (the
-    weighted kernel at w=1 — bit-identical to the injected
-    louvain_moves form, asserted in tests): the round-9 ``level1=``
-    injection existed to share one materialized assignment with
-    q_louvain across bench reps, which the no-cross-run-caching rule
-    removed; without the sharing it only cost a SECOND _trade_edges
-    materialization plus a duplicate symmetric-adjacency build
-    (~2-3 s at sf0.1) on top of the in-operator level 1."""
+    per level-1 community."""
     from simba_spark.operators.graph import louvain
 
     return louvain(_trade_edges(spark, sf_dir), iters=4, levels=2)

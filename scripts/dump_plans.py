@@ -5,6 +5,12 @@ Usage: python scripts/dump_plans.py <suffix> [query ...]
   suffix: 'before' or 'after' (file name suffix)
   queries: default = every bench HEADLINE query
 
+       python scripts/dump_plans.py compare [query ...]
+  diffs each <q>_before.txt against <q>_after.txt (default: every
+  query with a 'before' dump), with the session counters in a plan
+  (expression IDs '#123', exchange 'plan_id=', 'RDD[123]') normalised;
+  exits 1 on any difference or missing dump.
+
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_PLANS_DIR (default plans/r11).
 
@@ -14,7 +20,9 @@ PushedFilters, BatchEvalPython), which is visible at this stage.
 """
 from __future__ import annotations
 
+import difflib
 import os
+import re
 import sys
 import traceback
 
@@ -22,6 +30,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.environ.get("SPARK_GRAFT_PLANS_DIR", "plans/r11")
+_COUNTERS = re.compile(r"#\d+|plan_id=\d+|RDD\[\d+\]")
+
+
+def _normalised(path: str) -> list[str]:
+    with open(path) as f:
+        text = f.read()
+    return _COUNTERS.sub(lambda m: re.sub(r"\d+", "N", m.group()), text).splitlines(True)
+
+
+def compare(selected: list[str]) -> int:
+    names = selected or sorted(
+        f[: -len("_before.txt")] for f in os.listdir(OUT) if f.endswith("_before.txt"))
+    rc = 0
+    for name in names:
+        before, after = (os.path.join(OUT, f"{name}_{s}.txt") for s in ("before", "after"))
+        try:
+            diff = list(difflib.unified_diff(_normalised(before), _normalised(after), before, after))
+        except FileNotFoundError as e:
+            print(f"MISSING {e.filename}")
+            rc = 1
+            continue
+        print(f"{'DIFFERENT' if diff else 'IDENTICAL'} {name}")
+        sys.stdout.writelines(diff)
+        rc |= bool(diff)
+    return rc
 
 
 def main(suffix: str, selected: list[str]) -> int:
@@ -61,4 +94,6 @@ def main(suffix: str, selected: list[str]) -> int:
 
 
 if __name__ == "__main__":
+    if sys.argv[1] == "compare":
+        sys.exit(compare(sys.argv[2:]))
     sys.exit(main(sys.argv[1], sys.argv[2:]))

@@ -92,15 +92,6 @@ def in_circle_range(cols, center: Sequence[float], radius: float) -> Column:
     return dist2(cols, center) <= F.lit(r * r)
 
 
-def in_mbr_range(cols, low, high, radius: float) -> Column:
-    """Bounding-box pre-filter for a circle query: the circle's MBR.
-    Sargable (pushes to Parquet) unlike the quadratic circle predicate;
-    callers AND this with :func:`in_circle_range`."""
-    lo = [c - float(radius) for c in low]
-    hi = [c + float(radius) for c in high]
-    return in_range(cols, lo, hi)
-
-
 # ---------------------------------------------------------------------------
 # z-order curve as a Column expression (ref: spatial/ZValue.scala:24-64)
 

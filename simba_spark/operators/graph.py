@@ -1761,104 +1761,10 @@ def louvain_moves(
     fixed ``iters`` cap bounds). Returns ``(node, community)``; score
     a labeling with :func:`modularity`.
 
-    Scale: the assignment frame carries ``__deg`` so Σtot is a
-    node-scale aggregate with NO join and the per-round chain is
-    exactly three equi-joins — und⋈comm on the neighbor key (the
-    edge frame is pre-partitioned on that key once, so only the
-    node-scale side shuffles each round), cand⋈tot on the candidate
-    community, then ⋈comm on the node id, whose exchange the final
-    ``min_by`` argmax reuses (groupBy on the join key — no extra
-    shuffle). 2m is a 1-row broadcast (in-plan, no collect);
-    assignments localCheckpoint lazily (the pagerank discipline).
-    No driver state, no cartesian.
+    This is :func:`louvain` at ``levels=1``: its weighted move kernel
+    with every edge weight 1.
     """
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-    )
-    und = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .repartition("b")
-        .localCheckpoint(eager=False)
-    )
-    from .pipeline import _unit_hash
-
-    two_m = und.agg(F.count(F.lit(1)).alias("__2m"))
-    comm = und.groupBy(F.col("a").alias("node")).agg(
-        F.count(F.lit(1)).alias("__deg")
-    ).select(
-        "node", F.col("node").alias("community"), "__deg"
-    ).localCheckpoint(eager=True)
-    for r in range(int(iters)):
-        tot = comm.groupBy("community").agg(F.sum("__deg").alias("__tot"))
-        # k_{i,C} and the own-community candidate in ONE aggregation:
-        # edge rows contribute 1 per neighbor in C, the union'd own-row
-        # contributes 0, so sum(__k) == the old count-then-max chain
-        # (exact integer arithmetic — bit-identical). The explicit
-        # repartition("node") makes every downstream step of the round
-        # reuse hash(node): the (node, __c) groupBy is satisfied by it
-        # (subset clustering), tot/comm join broadcast, and the final
-        # argmax groupBy(node) needs no exchange — ONE shuffle per
-        # round where the count/max/argmax chain took three.
-        cand = (
-            und.join(comm.select(F.col("node").alias("b"),
-                                 F.col("community").alias("__c")), "b")
-            .select(F.col("a").alias("node"), "__c",
-                    F.lit(1).cast("long").alias("__k"))
-            .unionByName(
-                comm.select("node", F.col("community").alias("__c"),
-                            F.lit(0).cast("long").alias("__k")))
-            .repartition("node")
-            .groupBy("node", "__c").agg(F.sum("__k").alias("__k"))
-        )
-        scored = (
-            cand.join(tot.select(F.col("community").alias("__c"), "__tot"),
-                      "__c")
-            .join(comm, "node")
-            .crossJoin(F.broadcast(two_m))
-        )
-        adj = F.when(
-            F.col("__c") == F.col("community"), F.col("__deg")
-        ).otherwise(F.lit(0).cast("long"))
-        score = (
-            F.col("__k").cast("double")
-            - F.col("__deg").cast("double")
-            * (F.col("__tot") - adj).cast("double")
-            / F.col("__2m").cast("double")
-        )
-        best = (
-            scored.select("node", "community", "__deg", "__c",
-                          score.alias("__s"))
-            .groupBy("node")
-            .agg(
-                F.first("community").alias("community"),
-                F.first("__deg").alias("__deg"),
-                F.min_by(
-                    "__c",
-                    F.struct((-F.col("__s")).alias("__o"), F.col("__c")),
-                ).alias("__best"),
-                F.max(F.when(F.col("__c") != F.col("community"),
-                             F.col("__s"))).alias("__sbest"),
-                F.max(F.when(F.col("__c") == F.col("community"),
-                             F.col("__s"))).alias("__scur"),
-            )
-        )
-        # one hash-bucket of nodes moves per round (the parallel-Louvain
-        # anti-swap discipline), and only on STRICTLY positive gain vs
-        # staying — frozen nodes keep the target communities stable, so
-        # each accepted move improves Q against the current assignment
-        may_move = ((_unit_hash("node", 7) < 0.5) == F.lit(r % 2 == 0))
-        gain = F.col("__sbest") > F.col("__scur")
-        comm = best.select(
-            "node",
-            F.when(may_move & gain, F.col("__best"))
-            .otherwise(F.col("community")).alias("community"),
-            "__deg",
-        ).localCheckpoint(eager=True)
-    return comm.select("node", "community")
+    return louvain(edges, src, dst, iters, levels=1)
 
 
 def louvain_moves_sql(
@@ -1968,10 +1874,12 @@ def _louvain_weighted_moves(ew, nodes_deg, two_m: int, iters: int,
         comm = comm.localCheckpoint(eager=True)
     for r in range(int(iters)):
         tot = comm.groupBy("community").agg(F.sum("__deg").alias("__tot"))
-        # fused k_{i,C} + own-community candidate, one hash(node)
-        # shuffle per round — the louvain_moves rewrite at w != 1
-        # (sum(w) replaces the edge count; the own-row contributes 0,
-        # so sum == the old sum-then-max chain, exact integers)
+        # k_{i,C} and the own-community candidate in ONE aggregation:
+        # edge rows contribute w per neighbor in C, the union'd own-row
+        # contributes 0 (exact integers). The explicit
+        # repartition("node") lets the (node, __c) groupBy and the
+        # final argmax groupBy(node) reuse hash(node): one shuffle per
+        # round
         cand = (
             ew.join(comm.select(F.col("node").alias("b"),
                                 F.col("community").alias("__c")), "b")
@@ -2013,6 +1921,10 @@ def _louvain_weighted_moves(ew, nodes_deg, two_m: int, iters: int,
                              F.col("__s"))).alias("__scur"),
             )
         )
+        # one hash-bucket of nodes moves per round (the parallel-Louvain
+        # anti-swap discipline), and only on STRICTLY positive gain vs
+        # staying — frozen nodes keep the target communities stable, so
+        # each accepted move improves Q against the current assignment
         may_move = ((_unit_hash("node", 7) < 0.5) == F.lit(r % 2 == 0))
         gain = F.col("__sbest") > F.col("__scur")
         comm = best.select(
@@ -2030,7 +1942,6 @@ def louvain(
     dst: str = "dst",
     iters: int = 4,
     levels: int = 2,
-    level1: Optional[DataFrame] = None,
 ) -> DataFrame:
     """FULL multi-level Louvain (Blondel et al. 2008's aggregation
     pipeline, the part :func:`louvain_moves` is one phase of): run the
@@ -2039,8 +1950,8 @@ def louvain(
     internal edges become self mass that stays in the super-node's
     degree — and re-run the moves on the weighted community graph;
     the final assignment maps every original node through all
-    ``levels``. ``levels=1`` is exactly :func:`louvain_moves` (the
-    w=1 case of the same kernel, asserted in tests).
+    ``levels``. ``levels=1`` is the one-level move phase,
+    :func:`louvain_moves`.
 
     SYNCHRONOUS moves can regress Q on a level (same-bucket movers
     score against stale community masses — the classic synchronous-
@@ -2057,18 +1968,16 @@ def louvain(
     community, so later levels run the same three-equi-join rounds on
     frames orders of magnitude smaller. Contraction is two node-keyed
     equi-joins + one canonical-pair groupBy on the (already weighted)
-    edge set; each level's Q score is two original-scale join-
-    aggregates reduced to a 1-row frame, and the best-level selection
-    is an in-plan broadcast CASE — 2m is level-invariant, computed
-    once. No driver state, no cartesian, no collect.
+    edge set. 2m is level-invariant and exact: it is collected ONCE
+    (one 1-row job) and planned as a literal. Each level's Q is scored
+    at CONTRACTED scale — the incoming mapping's Q is the identity
+    labeling's on the contracted graph — and the best-level selection
+    is an in-plan broadcast CASE. No cartesian.
 
-    ``level1`` injects a PRECOMPUTED level-1 assignment (a ``(node,
-    community)`` frame from :func:`louvain_moves` on the SAME edges
-    with the same ``iters``) so a session that runs both the one-level
-    kernel and the multi-level pipeline pays the dominant level-1
-    rounds ONCE (the shared-HyperBall-pass shape). The caller owns the
-    equivalence contract — an assignment from different parameters
-    silently becomes the level the contraction coarsens.
+    Jobs run while the frame is BUILT, not only at the caller's
+    action: the 2m collect and the eager lineage cuts of every move
+    round and contraction execute inside this call, so its cost and
+    any failure surface here even if the result is never read.
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
@@ -2137,12 +2046,9 @@ def louvain(
                          ).alias("__deg"))
             ).localCheckpoint(eager=True)
             pre_ckpt = True
-        if lvl == 0 and level1 is not None:
-            cm = level1.select("node", "community")
-        else:
-            cm = _louvain_weighted_moves(
-                sym, nodes_deg, two_m, iters,
-                pre_checkpointed=pre_ckpt).select("node", "community")
+        cm = _louvain_weighted_moves(
+            sym, nodes_deg, two_m, iters,
+            pre_checkpointed=pre_ckpt).select("node", "community")
         if mapping is None:
             # cm is already a checkpoint (+projection) from the move
             # kernel — re-checkpointing it bought one extra AQE cycle.
@@ -2250,23 +2156,29 @@ def louvain(
         new_cw = g.filter(F.col("a") != F.col("b"))
         internal = g.filter(F.col("a") == F.col("b")).select(
             F.col("a").alias("node"), F.col("w").alias("s"))
-        carried = internal if sl is None else internal.unionByName(
-            sl.join(cm, "node").groupBy(
-                F.col("community").alias("node")
-            ).agg(F.sum("s").alias("s"))
-        ).groupBy("node").agg(F.sum("s").alias("s"))
-        # node universe for the next level = every community: each has
-        # >= 1 member with >= 1 edge and every member edge lands in ce
-        # with that community as a key of g — so the former node-scale
-        # cm.select(community).distinct() is a community-pair-scale
-        # distinct over g's keys (exactly the same set)
-        sl = (
-            g.select("a").unionByName(g.select(F.col("b").alias("a")))
-            .distinct().select(F.col("a").alias("node"))
-            .join(carried, "node", "left")
-            .select("node",
-                    F.coalesce(F.col("s"), lit0).alias("s"))
-        )
+        if sl is None:
+            # node universe for level 1 = every community: each has >= 1
+            # member with >= 1 edge and every member edge lands in ce
+            # with that community as a key of g — so the node-scale
+            # cm.select(community).distinct() is a community-pair-scale
+            # distinct over g's keys (exactly the same set)
+            sl = (
+                g.select("a").unionByName(g.select(F.col("b").alias("a")))
+                .distinct().select(F.col("a").alias("node"))
+                .join(internal, "node", "left")
+                .select("node",
+                        F.coalesce(F.col("s"), lit0).alias("s"))
+            )
+        else:
+            # from the second contraction on, a community of super-nodes
+            # that hold self mass only has no row in g; sl ⋈ cm carries
+            # every community of this level (sl is the whole universe),
+            # and each of g's keys is one of them
+            sl = internal.unionByName(
+                sl.join(cm, "node").groupBy(
+                    F.col("community").alias("node")
+                ).agg(F.sum("s").alias("s"))
+            ).groupBy("node").agg(F.sum("s").alias("s"))
         # sl built here is read by level lvl+1's nodes_deg (a
         # checkpoint), its win_carry, and — only when another
         # contraction follows — its carried union; all community-scale

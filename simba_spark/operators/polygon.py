@@ -16,6 +16,11 @@ Polygon *columns* (arbitrary per-row polygons) are JVM-side too:
 :func:`in_polygon_col` runs the same even-odd test with higher-order
 array functions (aggregate/zip_with over the vertex arrays) — no
 pandas UDF anywhere in this module.
+
+The polygon joins (:func:`polygon_distance_join`,
+:func:`polygon_polygon_join`) take their candidate pairs from the
+planar grid kernel in :mod:`simba_spark.operators.distance_join` and
+add only the polygon MBRs and the exact refine.
 """
 
 from __future__ import annotations
@@ -24,6 +29,8 @@ from typing import Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .distance_join import _grid_box_join, _prefix_columns
 
 
 def in_polygon(
@@ -269,82 +276,20 @@ def polygon_distance_join(
     reference reaches through JTS minDist inside its distance-join
     operators (ref: Polygon.scala:83-107 + DJSpark.scala:36-118).
 
-    Same program shape as the grid distance join: each polygon explodes
-    to the grid cells its r-expanded MBR covers, a point lives in
-    exactly ONE cell (unique emission — no dedup pass), equi-join on
-    cell, then the exact JVM-side refine
-    :func:`point_to_polygon_dist2` <= r². `cell_size=None` derives the
-    width from the average expanded-MBR extent (1-row broadcast
-    aggregate)."""
+    Candidates come from the planar grid kernel
+    (:func:`~simba_spark.operators.distance_join._grid_box_join`): each
+    polygon's r-expanded MBR against the point's one cell, then the
+    exact JVM-side refine ``dist(polygon, point) <= r``."""
     assert len(point_cols) == 2, "polygon_distance_join is 2-D"
     r = float(r)
-    lp = polys.select([F.col(c).alias(f"{left_prefix}{c}") for c in polys.columns])
-    rp = points.select([F.col(c).alias(f"{right_prefix}{c}") for c in points.columns])
+    lp = _prefix_columns(polys, left_prefix)
+    rp = _prefix_columns(points, right_prefix)
     pc = F.col(f"{left_prefix}{poly_col}")
     px = F.col(f"{right_prefix}{point_cols[0]}").cast("double")
     py = F.col(f"{right_prefix}{point_cols[1]}").cast("double")
-
-    # r-expanded MBR as plain columns, computed ONCE per polygon row:
-    # higher-order functions are CodegenFallback, so everything
-    # evaluated per CANDIDATE must be plain arithmetic — the exact
-    # refine only runs on rows that survive the codegen'd box test
-    xs = F.transform(pc, lambda v: v["x"])
-    ys = F.transform(pc, lambda v: v["y"])
-    lp = lp.select(
-        "*",
-        (F.array_min(xs) - F.lit(r)).alias("__mnx"),
-        (F.array_max(xs) + F.lit(r)).alias("__mxx"),
-        (F.array_min(ys) - F.lit(r)).alias("__mny"),
-        (F.array_max(ys) + F.lit(r)).alias("__mxy"),
-    )
-
-    if cell_size is None:
-        stats = F.broadcast(
-            lp.select(
-                F.greatest(
-                    F.col("__mxx") - F.col("__mnx"), F.col("__mxy") - F.col("__mny")
-                ).alias("__ext")
-            ).agg(F.greatest(F.avg("__ext"), F.lit(1e-9)).alias("__cw"))
-        )
-        lp = lp.crossJoin(stats)
-        rp = rp.crossJoin(stats)
-        cw = F.col("__cw")
-    else:
-        cw = F.lit(float(cell_size))
-
-    cxlo = F.floor(F.col("__mnx") / cw).cast("long")
-    cxhi = F.floor(F.col("__mxx") / cw).cast("long")
-    cylo = F.floor(F.col("__mny") / cw).cast("long")
-    cyhi = F.floor(F.col("__mxy") / cw).cast("long")
-    n_cells = (cxhi - cxlo + 1) * (cyhi - cylo + 1)
-    guard = F.when(n_cells <= int(max_cells_per_row), cxhi).otherwise(
-        F.raise_error(
-            F.lit(
-                "polygon_distance_join: a polygon's expanded MBR covers more "
-                f"than {max_cells_per_row} cells — pass a larger cell_size"
-            )
-        ).cast("long")
-    )
-    lg = lp.withColumn("__cx", F.explode(F.sequence(cxlo, guard))).withColumn(
-        "__cy", F.explode(F.sequence(cylo, cyhi))
-    )
-    rg = rp.withColumn("__cx", F.floor(px / cw).cast("long")).withColumn(
-        "__cy", F.floor(py / cw).cast("long")
-    )
-    if cell_size is None:
-        lg = lg.drop("__cw")
-        rg = rg.drop("__cw")
     return (
-        lg.join(rg, on=["__cx", "__cy"], how="inner")
-        # codegen'd sargable pre-filter: point inside the r-expanded
-        # MBR — kills the bulk of candidates before the interpreted
-        # exact polygon-distance test
-        .filter(
-            (px >= F.col("__mnx"))
-            & (px <= F.col("__mxx"))
-            & (py >= F.col("__mny"))
-            & (py <= F.col("__mxy"))
-        )
+        _grid_box_join(lp, rp, _poly_mbr(pc, r), ([px, py], None), cell_size,
+                       max_cells_per_row, "polygon_distance_join")
         # dist(poly, p) <= r  ⟺  some edge within r OR p inside — the
         # Or short-circuits and exists() stops at the first hit, so the
         # common candidate evaluates ONE interpreted HOF instead of the
@@ -359,7 +304,6 @@ def polygon_distance_join(
             )
             | in_polygon_col(px, py, pc)
         )
-        .drop("__cx", "__cy", "__mnx", "__mxx", "__mny", "__mxy")
     )
 
 
@@ -466,18 +410,14 @@ def polygon_to_polygon_dist2(poly_a, poly_b, eps: float = 1e-12) -> Column:
     )
 
 
-def _poly_mbr_cols(df: DataFrame, poly, r: float, prefix: str) -> DataFrame:
-    """Attach the r-expanded MBR of a polygon column as plain columns
-    (computed once per row — everything evaluated per CANDIDATE later
-    must be codegen'd plain arithmetic)."""
+def _poly_mbr(poly, r: float):
+    """The r-expanded MBR of a polygon column as ``(lo, hi)`` Column
+    lists."""
     xs = F.transform(poly, lambda v: v["x"])
     ys = F.transform(poly, lambda v: v["y"])
-    return df.select(
-        "*",
-        (F.array_min(xs) - F.lit(r)).alias(f"{prefix}mnx"),
-        (F.array_max(xs) + F.lit(r)).alias(f"{prefix}mxx"),
-        (F.array_min(ys) - F.lit(r)).alias(f"{prefix}mny"),
-        (F.array_max(ys) + F.lit(r)).alias(f"{prefix}mxy"),
+    return (
+        [F.array_min(xs) - F.lit(r), F.array_min(ys) - F.lit(r)],
+        [F.array_max(xs) + F.lit(r), F.array_max(ys) + F.lit(r)],
     )
 
 
@@ -497,96 +437,20 @@ def polygon_polygon_join(
     the shape-matrix with the reference's JTS polygon×polygon dispatch
     (ref: Polygon.scala:40-107) as a distributed grid join.
 
-    Both sides are polygons, so both explode to the grid cells their
-    (A: r-expanded) MBR covers — a pair can share several cells, so
-    each pair is emitted ONLY in its canonical cell: the cell of the
-    top-left corner of the overlap of the two exploded boxes
-    (max of the mins per axis), which every candidate pair provably
-    shares. Equi-join + filter, no dedup shuffle — the 2-D analog of
-    interval_overlap_join's canonical-bin rule. The codegen'd
-    MBR-overlap pre-filter kills candidates before the interpreted
-    exact polygon-distance refine."""
+    Candidates come from the planar grid kernel
+    (:func:`~simba_spark.operators.distance_join._grid_box_join`): A's
+    r-expanded MBR against B's MBR, each pair once in its canonical
+    cell, before the interpreted exact polygon-distance refine."""
     r = float(r)
-    lp = polys_a.select(
-        [F.col(c).alias(f"{left_prefix}{c}") for c in polys_a.columns]
-    )
-    rp = polys_b.select(
-        [F.col(c).alias(f"{right_prefix}{c}") for c in polys_b.columns]
-    )
+    lp = _prefix_columns(polys_a, left_prefix)
+    rp = _prefix_columns(polys_b, right_prefix)
     pa = F.col(f"{left_prefix}{poly_a_col}")
     pb = F.col(f"{right_prefix}{poly_b_col}")
-    lp = _poly_mbr_cols(lp, pa, r, "__a")
-    rp = _poly_mbr_cols(rp, pb, 0.0, "__b")
-
-    if cell_size is None:
-        stats = F.broadcast(
-            lp.select(
-                F.greatest(
-                    F.col("__amxx") - F.col("__amnx"),
-                    F.col("__amxy") - F.col("__amny"),
-                ).alias("__ext")
-            )
-            .unionByName(
-                rp.select(
-                    F.greatest(
-                        F.col("__bmxx") - F.col("__bmnx"),
-                        F.col("__bmxy") - F.col("__bmny"),
-                    ).alias("__ext")
-                )
-            )
-            .agg(F.greatest(F.avg("__ext"), F.lit(1e-9)).alias("__cw"))
-        )
-        lp = lp.crossJoin(stats)
-        rp = rp.crossJoin(stats)
-        cw = F.col("__cw")
-    else:
-        cw = F.lit(float(cell_size))
-
-    def explode_cells(df, mnx, mxx, mny, mxy, who):
-        cxlo = F.floor(F.col(mnx) / cw).cast("long")
-        cxhi = F.floor(F.col(mxx) / cw).cast("long")
-        cylo = F.floor(F.col(mny) / cw).cast("long")
-        cyhi = F.floor(F.col(mxy) / cw).cast("long")
-        n_cells = (cxhi - cxlo + 1) * (cyhi - cylo + 1)
-        guard = F.when(n_cells <= int(max_cells_per_row), cxhi).otherwise(
-            F.raise_error(
-                F.lit(
-                    f"polygon_polygon_join: a {who} MBR covers more than "
-                    f"{max_cells_per_row} cells — pass a larger cell_size"
-                )
-            ).cast("long")
-        )
-        return df.withColumn("__cx", F.explode(F.sequence(cxlo, guard))).withColumn(
-            "__cy", F.explode(F.sequence(cylo, cyhi))
-        )
-
-    lg = explode_cells(lp, "__amnx", "__amxx", "__amny", "__amxy", "left")
-    rg = explode_cells(rp, "__bmnx", "__bmxx", "__bmny", "__bmxy", "right")
-    if cell_size is None:
-        lg = lg.drop("__cw")
-    canon_cx = F.floor(F.greatest(F.col("__amnx"), F.col("__bmnx")) / cw).cast("long")
-    canon_cy = F.floor(F.greatest(F.col("__amny"), F.col("__bmny")) / cw).cast("long")
-    out = (
-        lg.join(rg, on=["__cx", "__cy"], how="inner")
-        # codegen'd sargable pre-filters: boxes overlap AND this is the
-        # pair's canonical cell (unique emission)
-        .filter(
-            (F.col("__amnx") <= F.col("__bmxx"))
-            & (F.col("__bmnx") <= F.col("__amxx"))
-            & (F.col("__amny") <= F.col("__bmxy"))
-            & (F.col("__bmny") <= F.col("__amxy"))
-            & (F.col("__cx") == canon_cx)
-            & (F.col("__cy") == canon_cy)
-        )
-    )
+    out = _grid_box_join(lp, rp, _poly_mbr(pa, r), _poly_mbr(pb, 0.0),
+                         cell_size, max_cells_per_row, "polygon_polygon_join")
     if r == 0.0:
-        out = out.filter(polygons_intersect_col(pa, pb))
-    else:
-        out = out.filter(polygon_to_polygon_dist2(pa, pb) <= F.lit(r * r))
-    drop = ["__cx", "__cy"] + [f"__{s}{c}" for s in "ab" for c in ("mnx", "mxx", "mny", "mxy")]
-    if cell_size is None:
-        drop.append("__cw")
-    return out.drop(*drop)
+        return out.filter(polygons_intersect_col(pa, pb))
+    return out.filter(polygon_to_polygon_dist2(pa, pb) <= F.lit(r * r))
 
 
 def polygon_range(

@@ -21,6 +21,11 @@ Column encodings (2-D segments, N-D boxes and circles):
   :mod:`simba_spark.operators.polygon`, dispatched here via
   ``kind='polygon'``
 
+The shape joins (:func:`shape_distance_join`, :func:`shape_shape_join`)
+take their candidate pairs from the planar grid kernel in
+:mod:`simba_spark.operators.distance_join` and add only their bounding
+boxes and exact refine.
+
 Scale notes: every predicate ANDs a sargable bounding-box pre-filter
 (min/max comparisons on plain columns when the caller stores the
 coordinates as top-level columns) with the exact test, so Parquet
@@ -34,6 +39,8 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .distance_join import _grid_box_join, _prefix_columns
 
 
 # ---------------------------------------------------------------------------
@@ -428,70 +435,23 @@ def shape_distance_join(
     Shape.minDist; polygons have their own
     :func:`~simba_spark.operators.polygon.polygon_distance_join`).
 
-    Same grid program as every distance join here: shapes explode to
-    the cells of their r-expanded bounding box, a point lives in ONE
-    cell (unique emission, no dedup), equi-join on cell, codegen'd
-    minDist refine. `cell_size=None` derives the width from the
-    average expanded extent (1-row broadcast aggregate)."""
+    Candidates come from the planar grid kernel
+    (:func:`~simba_spark.operators.distance_join._grid_box_join`):
+    each shape's r-expanded bounding box against the point's one cell,
+    then the codegen'd minDist refine."""
     assert len(point_cols) == 2, "shape_distance_join is 2-D"
     r = float(r)
-    lp = shapes.select([F.col(c).alias(f"{left_prefix}{c}") for c in shapes.columns])
-    rp = points.select([F.col(c).alias(f"{right_prefix}{c}") for c in points.columns])
+    lp = _prefix_columns(shapes, left_prefix)
+    rp = _prefix_columns(points, right_prefix)
     sc = f"{left_prefix}{shape_col}"
     px = F.col(f"{right_prefix}{point_cols[0]}").cast("double")
     py = F.col(f"{right_prefix}{point_cols[1]}").cast("double")
-
     mnx, mxx, mny, mxy = _shape_mbr_cols(sc, kind)
-    lp = lp.select(
-        "*",
-        (mnx - F.lit(r)).alias("__mnx"), (mxx + F.lit(r)).alias("__mxx"),
-        (mny - F.lit(r)).alias("__mny"), (mxy + F.lit(r)).alias("__mxy"),
-    )
-    if cell_size is None:
-        stats = F.broadcast(
-            lp.select(
-                F.greatest(
-                    F.col("__mxx") - F.col("__mnx"), F.col("__mxy") - F.col("__mny")
-                ).alias("__ext")
-            ).agg(F.greatest(F.avg("__ext"), F.lit(1e-9)).alias("__cw"))
-        )
-        lp = lp.crossJoin(stats)
-        rp = rp.crossJoin(stats)
-        cw = F.col("__cw")
-    else:
-        cw = F.lit(float(cell_size))
-
-    cxlo = F.floor(F.col("__mnx") / cw).cast("long")
-    cxhi = F.floor(F.col("__mxx") / cw).cast("long")
-    cylo = F.floor(F.col("__mny") / cw).cast("long")
-    cyhi = F.floor(F.col("__mxy") / cw).cast("long")
-    n_cells = (cxhi - cxlo + 1) * (cyhi - cylo + 1)
-    guard = F.when(n_cells <= int(max_cells_per_row), cxhi).otherwise(
-        F.raise_error(
-            F.lit(
-                "shape_distance_join: a shape's expanded MBR covers more "
-                f"than {max_cells_per_row} cells — pass a larger cell_size"
-            )
-        ).cast("long")
-    )
-    lg = lp.withColumn("__cx", F.explode(F.sequence(cxlo, guard))).withColumn(
-        "__cy", F.explode(F.sequence(cylo, cyhi))
-    )
-    rg = rp.withColumn("__cx", F.floor(px / cw).cast("long")).withColumn(
-        "__cy", F.floor(py / cw).cast("long")
-    )
-    if cell_size is None:
-        lg = lg.drop("__cw")
-        rg = rg.drop("__cw")
-    return (
-        lg.join(rg, on=["__cx", "__cy"], how="inner")
-        .filter(
-            (px >= F.col("__mnx")) & (px <= F.col("__mxx"))
-            & (py >= F.col("__mny")) & (py <= F.col("__mxy"))
-        )
-        .filter(_point_shape_within(sc, px, py, r, kind))
-        .drop("__cx", "__cy", "__mnx", "__mxx", "__mny", "__mxy")
-    )
+    box = ([mnx - F.lit(r), mny - F.lit(r)], [mxx + F.lit(r), mxy + F.lit(r)])
+    return _grid_box_join(
+        lp, rp, box, ([px, py], None), cell_size, max_cells_per_row,
+        "shape_distance_join",
+    ).filter(_point_shape_within(sc, px, py, r, kind))
 
 
 # ---------------------------------------------------------------------------
@@ -629,102 +589,19 @@ def shape_shape_join(
     ShapeUtils.getShape'd rows of any kind) as a distributed grid join
     — no cartesian anywhere.
 
-    Same canonical-cell program as
-    :func:`~simba_spark.operators.polygon.polygon_polygon_join`: both
-    sides explode to the grid cells covered by their (left:
-    r-expanded) bounding boxes; a pair sharing several cells is
-    emitted ONLY in the cell of the top-left corner of their exploded
-    boxes' overlap (max of the mins per axis — a cell every candidate
-    pair provably shares), so the cell equi-join needs no dedup
-    shuffle. Codegen'd MBR-overlap pre-filter kills candidates before
-    the exact :func:`shape_pair_within` refine. ``cell_size=None``
-    derives the width from the average expanded extent of both sides
-    (1-row broadcast aggregate, no driver job)."""
+    Candidates come from the planar grid kernel
+    (:func:`~simba_spark.operators.distance_join._grid_box_join`): the
+    left r-expanded and right bounding boxes, each pair once in its
+    canonical cell, then the exact :func:`shape_pair_within` refine."""
     r = float(r)
-    lp = left.select([F.col(c).alias(f"{left_prefix}{c}") for c in left.columns])
-    rp = right.select([F.col(c).alias(f"{right_prefix}{c}") for c in right.columns])
+    lp = _prefix_columns(left, left_prefix)
+    rp = _prefix_columns(right, right_prefix)
     sa = F.col(f"{left_prefix}{left_shape_col}")
     sb = F.col(f"{right_prefix}{right_shape_col}")
-
     amnx, amxx, amny, amxy = _shape_mbr_cols(sa, left_kind)
     bmnx, bmxx, bmny, bmxy = _shape_mbr_cols(sb, right_kind)
-    lp = lp.select(
-        "*",
-        (amnx - F.lit(r)).alias("__amnx"), (amxx + F.lit(r)).alias("__amxx"),
-        (amny - F.lit(r)).alias("__amny"), (amxy + F.lit(r)).alias("__amxy"),
-    )
-    rp = rp.select(
-        "*",
-        bmnx.alias("__bmnx"), bmxx.alias("__bmxx"),
-        bmny.alias("__bmny"), bmxy.alias("__bmxy"),
-    )
-
-    if cell_size is None:
-        stats = F.broadcast(
-            lp.select(
-                F.greatest(
-                    F.col("__amxx") - F.col("__amnx"),
-                    F.col("__amxy") - F.col("__amny"),
-                ).alias("__ext")
-            )
-            .unionByName(
-                rp.select(
-                    F.greatest(
-                        F.col("__bmxx") - F.col("__bmnx"),
-                        F.col("__bmxy") - F.col("__bmny"),
-                    ).alias("__ext")
-                )
-            )
-            .agg(F.greatest(F.avg("__ext"), F.lit(1e-9)).alias("__cw"))
-        )
-        lp = lp.crossJoin(stats)
-        rp = rp.crossJoin(stats)
-        cw = F.col("__cw")
-    else:
-        cw = F.lit(float(cell_size))
-
-    def explode_cells(df, mnx, mxx, mny, mxy, who):
-        cxlo = F.floor(F.col(mnx) / cw).cast("long")
-        cxhi = F.floor(F.col(mxx) / cw).cast("long")
-        cylo = F.floor(F.col(mny) / cw).cast("long")
-        cyhi = F.floor(F.col(mxy) / cw).cast("long")
-        n_cells = (cxhi - cxlo + 1) * (cyhi - cylo + 1)
-        guard = F.when(n_cells <= int(max_cells_per_row), cxhi).otherwise(
-            F.raise_error(
-                F.lit(
-                    f"shape_shape_join: a {who} bounding box covers more "
-                    f"than {max_cells_per_row} cells — pass a larger "
-                    "cell_size"
-                )
-            ).cast("long")
-        )
-        return df.withColumn(
-            "__cx", F.explode(F.sequence(cxlo, guard))
-        ).withColumn("__cy", F.explode(F.sequence(cylo, cyhi)))
-
-    lg = explode_cells(lp, "__amnx", "__amxx", "__amny", "__amxy", "left")
-    rg = explode_cells(rp, "__bmnx", "__bmxx", "__bmny", "__bmxy", "right")
-    if cell_size is None:
-        lg = lg.drop("__cw")
-    canon_cx = F.floor(F.greatest(F.col("__amnx"), F.col("__bmnx")) / cw).cast("long")
-    canon_cy = F.floor(F.greatest(F.col("__amny"), F.col("__bmny")) / cw).cast("long")
-    out = (
-        lg.join(rg, on=["__cx", "__cy"], how="inner")
-        # codegen'd sargable pre-filters: expanded boxes overlap AND
-        # this is the pair's canonical cell (unique emission)
-        .filter(
-            (F.col("__amnx") <= F.col("__bmxx"))
-            & (F.col("__bmnx") <= F.col("__amxx"))
-            & (F.col("__amny") <= F.col("__bmxy"))
-            & (F.col("__bmny") <= F.col("__amxy"))
-            & (F.col("__cx") == canon_cx)
-            & (F.col("__cy") == canon_cy)
-        )
-        .filter(shape_pair_within(sa, left_kind, sb, right_kind, r))
-    )
-    drop = ["__cx", "__cy"] + [
-        f"__{s}{c}" for s in "ab" for c in ("mnx", "mxx", "mny", "mxy")
-    ]
-    if cell_size is None:
-        drop.append("__cw")
-    return out.drop(*drop)
+    abox = ([amnx - F.lit(r), amny - F.lit(r)], [amxx + F.lit(r), amxy + F.lit(r)])
+    return _grid_box_join(
+        lp, rp, abox, ([bmnx, bmny], [bmxx, bmxy]), cell_size,
+        max_cells_per_row, "shape_shape_join",
+    ).filter(shape_pair_within(sa, left_kind, sb, right_kind, r))

@@ -53,22 +53,6 @@ def cosine_topk(
     )
 
 
-def dot_topk(
-    df: DataFrame,
-    query_vec: Sequence[float],
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact top-k by dot product (for pre-normalized embeddings)."""
-    q = _query_lit(query_vec)
-    return (
-        df.withColumn("dot", F.round(vec_dot(F.col(vec_col), q), 6))
-        .orderBy(F.col("dot").desc(), F.col(id_col).asc())
-        .limit(int(k))
-    )
-
-
 def cosine_topk_ann(
     df: DataFrame,
     query_vec: Sequence[float],

@@ -782,17 +782,6 @@ def theta_merge(
     )
 
 
-def _theta_thresholds(sketch: DataFrame, groups, k: int) -> DataFrame:
-    """Per-group exclusive hash threshold: the max retained hash when
-    the sketch is full (n == k, count k-1 strictly-below values — the
-    same (k-1)/theta estimator as :func:`kmv_theta`), else 2^60
-    (exact side, theta = 1)."""
-    return sketch.groupBy(*groups).agg(
-        F.when(F.count(F.lit(1)) < k, F.lit(_THETA_MAX).cast("long"))
-        .otherwise(F.max("__th_h")).alias("__th_thr")
-    )
-
-
 def theta_estimate(
     sketch: DataFrame,
     group_by: Optional[Sequence[str]] = None,

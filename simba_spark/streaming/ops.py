@@ -1,4 +1,9 @@
-"""Streaming operators (additive — reference has none, SURVEY §2.5)."""
+"""Streaming operators (additive — reference has none, SURVEY §2.5).
+
+The planar distance joins key their grid cells with the batch kernel in
+:mod:`simba_spark.operators.distance_join`; the stream-static one IS the
+batch grid join.
+"""
 
 from __future__ import annotations
 
@@ -100,46 +105,17 @@ def streaming_distance_join(
     static_prefix: str = "s_",
 ) -> DataFrame:
     """Stream-static distance join: each streaming point joined to every
-    static point within `radius` (closed bound — same contract as the
-    batch grid join, DJSpark semantics).
-
-    Physical shape: the static side is exploded to every grid cell its
-    r-buffer touches (done once, re-used every micro-batch); the stream
-    row computes its single cell — a stream-static equi-join on the cell
-    key, which Spark executes as a broadcast/hash join per batch with no
-    stream-side shuffle. The exact-distance refine runs codegen'd.
+    static point within `radius` (closed bound) — the batch grid
+    :func:`~simba_spark.operators.distance_join.distance_join` itself,
+    stream on the point side: the static side explodes to the cells its
+    r-buffer touches (once, re-used every micro-batch) and each stream
+    row keys to its single cell, a stream-static equi-join with no
+    stream-side shuffle.
     """
-    r = float(radius)
-    assert r >= 0.0
-    s = 2.0 * r if r > 0 else 1.0
-    d = len(stream_cols)
-    assert d == len(static_cols)
+    from ..operators.distance_join import distance_join
 
-    static_p = static_df.select(
-        [F.col(c).alias(f"{static_prefix}{c}") for c in static_df.columns]
-    )
-    pcols = [f"{static_prefix}{c}" for c in static_cols]
-    lo = [F.floor((F.col(c) - F.lit(r)) / F.lit(s)).cast("long") for c in pcols]
-    hi = [F.floor((F.col(c) + F.lit(r)) / F.lit(s)).cast("long") for c in pcols]
-    sg = static_p
-    for i in range(d):
-        sg = sg.withColumn(f"__c{i}", F.explode(F.sequence(lo[i], hi[i])))
-    sg = sg.withColumn(
-        "__cell", F.struct(*[F.col(f"__c{i}").alias(f"c{i}") for i in range(d)])
-    ).drop(*[f"__c{i}" for i in range(d)])
-
-    cell = F.struct(
-        *[
-            F.floor(F.col(c) / F.lit(s)).cast("long").alias(f"c{i}")
-            for i, c in enumerate(stream_cols)
-        ]
-    )
-    st = stream_df.withColumn("__cell", cell)
-
-    from ..functions import dist2_cols
-
-    pred = dist2_cols(list(stream_cols), pcols) <= F.lit(r * r)
-    return st.join(sg, on="__cell", how="inner").filter(pred).drop("__cell")
+    return distance_join(stream_df, static_df, stream_cols, static_cols,
+                         radius, algo="grid", right_prefix=static_prefix)
 
 
 def streaming_geo_distance_join(
@@ -431,11 +407,12 @@ def streaming_stream_distance_join(
     runs codegen'd on the survivors. Symmetric-hash-join semantics come
     from Spark's stream-stream inner join; both inputs must carry event
     time."""
+    from ..functions import dist2_cols
+    from ..operators.distance_join import _buffer_cell, _grid_keyed
+
     r = float(radius)
     assert r >= 0.0
-    s = 2.0 * r if r > 0 else 1.0
-    d = len(left_cols)
-    assert d == len(right_cols)
+    assert len(left_cols) == len(right_cols)
 
     lp = left_stream.select(
         [F.col(c).alias(f"{left_prefix}{c}") for c in left_stream.columns]
@@ -447,29 +424,17 @@ def streaming_stream_distance_join(
     rcols = [f"{right_prefix}{c}" for c in right_cols]
     lts, rts = f"{left_prefix}{left_ts}", f"{right_prefix}{right_ts}"
 
-    lo = [F.floor((F.col(c) - F.lit(r)) / F.lit(s)).cast("long") for c in lcols]
-    hi = [F.floor((F.col(c) + F.lit(r)) / F.lit(s)).cast("long") for c in lcols]
-    lg = lp
-    for i in range(d):
-        lg = lg.withColumn(f"__lc{i}", F.explode(F.sequence(lo[i], hi[i])))
-    rg = rp
-    for i, c in enumerate(rcols):
-        rg = rg.withColumn(f"__rc{i}", F.floor(F.col(c) / F.lit(s)).cast("long"))
-
-    from ..functions import dist2_cols
-
-    cell_eq = F.lit(True)
-    for i in range(d):
-        cell_eq = cell_eq & (F.col(f"__lc{i}") == F.col(f"__rc{i}"))
+    s = F.lit(_buffer_cell(r))
+    lg = _grid_keyed(lp, [F.col(c) - F.lit(r) for c in lcols], s,
+                     hi=[F.col(c) + F.lit(r) for c in lcols])
+    rg = _grid_keyed(rp, [F.col(c) for c in rcols], s)
     time_ok = F.expr(
         f"`{rts}` >= `{lts}` - INTERVAL {time_bound} AND "
         f"`{rts}` <= `{lts}` + INTERVAL {time_bound}"
     )
     pred = dist2_cols(lcols, rcols) <= F.lit(r * r)
-    out = lg.join(rg, cell_eq & time_ok & pred, "inner")
-    return out.drop(
-        *[f"__lc{i}" for i in range(d)], *[f"__rc{i}" for i in range(d)]
-    )
+    return lg.join(rg, (lg["__cell"] == rg["__cell"]) & time_ok & pred,
+                   "inner").drop("__cell")
 
 
 def streaming_stream_geo_distance_join(
