@@ -8,7 +8,9 @@ Reference semantics reproduced here (SURVEY.md §2.2, §2.4):
   (ref: expression/InCircleRange.scala:32-50)
 - ``knn``           — global top-k by L2 distance, exactly k rows
   (ref: expression/InKNN.scala:29-42; physical path
-  FilterExec.scala:48-49 ``takeOrdered(k)``)
+  FilterExec.scala:48-49 ``takeOrdered(k)``), through
+  :func:`_knn_select` — the one kNN selection program, which
+  ``geo.geo_knn`` runs too with the spherical metric
 - ``knn_and / knn_or / knn_not`` — set semantics for boolean
   combinations containing a kNN term
   (ref: execution/FilterExec.scala:51-68)
@@ -22,7 +24,8 @@ sort, never more than k rows to the driver (SURVEY §4.2 two-phase analog).
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from dataclasses import dataclass
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -90,39 +93,101 @@ def knn(
     optional `tiebreak` column (usually the table's id) appended to the
     ordering. Output schema == input schema (distance column is internal).
 
-    With a registered layout the two-phase bound-and-prune of the
-    reference's indexed scan (ref: IndexedRelationScan.scala:117-151)
-    runs instead: phase 1 answers kNN over the smallest partition prefix
-    (by bounds-box min-dist) holding >= k rows, its kth distance θ then
-    prunes the final scan to partitions with minDist(q, bounds) <= θ.
-    Only k distances ever reach the driver; at 10k partitions the final
-    scan touches a handful instead of all.
+    With a registered layout the two-phase bound-and-prune of
+    :func:`_knn_select` runs instead, over squared distances: θ and the
+    box bounds are squared, and the θ-ball's z-cover is the box
+    [q-√θ, q+√θ].
     """
-    lay = registry.layout_for(df) if registry is not None else None
-    if (
-        lay is not None
-        and lay.kind == "zorder"
-        and list(cols) == lay.cols
-        and lay.bounds
-        and lay.bits > 0
-    ):
-        return _knn_via_layout(lay, cols, query_point, k, tiebreak)
-    return _knn_scan(df, cols, query_point, k, tiebreak)
+    q = [float(x) for x in query_point]
+
+    def ball_cover(lay, theta2):
+        r = theta2 ** 0.5
+        return lay.z_ranges_for_box([c - r for c in q], [c + r for c in q])
+
+    metric = _SelectMetric(
+        dist2(cols, q), lambda b: _bounds_mindist2(b, cols, q), ball_cover)
+    return _knn_select(df, cols, metric, "__simba_d2", k, tiebreak, registry,
+                       keep_dist=False)
 
 
-def _knn_scan(df, cols, query_point, k, tiebreak):
-    d2 = dist2(cols, query_point).alias("__simba_d2")
-    order = [F.col("__simba_d2").asc()]
+@dataclass(frozen=True)
+class _SelectMetric:
+    """One metric's share of the kNN selection, bound to a query point."""
+
+    #: distance to the query, or any key monotone in it
+    dist: Column
+    #: bounds-table row -> lower bound on ``dist`` over the bucket's box
+    box_lb: Callable[[dict], float]
+    #: (layout, θ) -> z-ranges covering every point with dist <= θ, or
+    #: None when the cover spans the whole domain
+    ball_cover: Callable
+
+
+def _knn_select(df, cols, metric, dist_col, k, tiebreak, registry, keep_dist):
+    """Exactly-k nearest rows under ``metric``, the distance riding in
+    ``dist_col`` (dropped from the output unless ``keep_dist``).
+
+    Unrouted: one ``orderBy(dist).limit(k)`` — TakeOrderedAndProject,
+    k rows to the driver. Over a routable z-order layout
+    (``registry.zorder_layout``) the reference's two-phase
+    bound-and-prune (ref: IndexedRelationScan.scala:117-151) runs, with
+    pruning expressed as sargable z-interval predicates (plus
+    bucket-directory pruning for persisted layouts) so skipped buckets
+    cost no I/O:
+
+    - phase 1: kNN over the smallest bucket prefix, ordered by
+      ``metric.box_lb``, holding >= k rows (any >=k-row subset yields a
+      valid upper bound θ = its kth distance; k scalars reach the
+      driver, the same traffic as the reference's takeOrdered merge);
+    - phase 2: if no other bucket's box can hold a closer-or-tied
+      point, phase 1 is final; else exact kNN over ``metric.ball_cover``
+      of the θ-ball — every true neighbor has dist <= θ.
+
+    A tiny table, k <= 0, or null coordinates leaving phase 1 short of
+    k distances (its max is then NOT a kth-NN bound) scan exactly."""
+    lay = registry.zorder_layout(df, cols) if registry is not None else None
+
+    def scan(source):
+        return _knn_scan(source, metric.dist, dist_col, k, tiebreak)
+
+    def done(out):
+        return out if keep_dist else out.drop(dist_col)
+
+    if lay is None:
+        return done(scan(df))
+    k = int(k)
+    ranked = sorted(lay.bounds, key=metric.box_lb)
+    sel, acc = [], 0
+    for b in ranked:
+        sel.append(int(b["zb"]))
+        acc += int(b["count"])
+        if acc >= k:
+            break
+    if k <= 0 or acc < k or len(sel) == len(ranked):
+        return done(scan(lay.pruned_scan(None)))
+    phase1 = scan(lay.pruned_scan(lay.z_ranges_for_buckets(sel)))
+    d_rows = phase1.select(dist_col).collect()
+    if len(d_rows) < k:
+        return done(scan(lay.pruned_scan(None)))
+    theta = max(r[0] for r in d_rows)
+    picked = set(sel)
+    if not any(metric.box_lb(b) <= theta for b in ranked
+               if int(b["zb"]) not in picked):
+        return done(phase1)
+    return done(scan(lay.pruned_scan(metric.ball_cover(lay, theta))))
+
+
+def _knn_scan(df, dist, dist_col, k, tiebreak):
+    order = [F.col(dist_col).asc()]
     if tiebreak is not None:
         order.append(F.col(tiebreak).asc())
     return (
-        df.withColumn("__simba_d2", d2)
+        df.withColumn(dist_col, dist)
         # a null distance (null key coordinates) never qualifies — without
         # this, Spark's NULLS-FIRST asc would hand nulls the top-k slots
-        .filter(F.col("__simba_d2").isNotNull())
+        .filter(F.col(dist_col).isNotNull())
         .orderBy(*order)
         .limit(int(k))
-        .drop("__simba_d2")
     )
 
 
@@ -137,61 +202,6 @@ def _bounds_mindist2(bounds_row, cols, q):
         d = max(float(lo) - q[i], 0.0, q[i] - float(hi))
         s += d * d
     return s
-
-
-def _knn_via_layout(lay, cols, query_point, k, tiebreak):
-    """Two-phase bound-and-prune over a z-order layout
-    (ref: IndexedRelationScan.scala:117-151), with pruning expressed as
-    sargable z-interval predicates (plus bucket-directory pruning for
-    persisted layouts) so the skipped buckets cost no I/O — not a
-    row filter over a full scan.
-
-    Phase 1: kNN over the smallest bounds-ordered bucket prefix holding
-    >= k rows (any >=k-row subset yields a valid upper bound θ).
-    Phase 2: exact kNN over the z-cover of the ball box [q-θ, q+θ] —
-    every true neighbor has dist <= θ, hence lies inside the cover.
-    Only k distances ever reach the driver."""
-    q = [float(x) for x in query_point]
-    k = int(k)
-    ranked = sorted(lay.bounds, key=lambda b: _bounds_mindist2(b, cols, q))
-
-    # phase 1: smallest bounds-ordered bucket prefix holding >= k rows
-    sel, acc = [], 0
-    for b in ranked:
-        sel.append(b)
-        acc += int(b["count"])
-        if acc >= k:
-            break
-    if acc < k or len(sel) == len(ranked):
-        return _knn_scan(lay.pruned_scan(None), cols, q, k, tiebreak)  # tiny table
-    sel_zbs = [int(b["zb"]) for b in sel]
-    phase1 = _knn_scan(
-        lay.pruned_scan(lay.z_ranges_for_buckets(sel_zbs)), cols, q, k, tiebreak
-    )
-    # θ = kth distance of phase 1 (exactly k scalars to the driver — the
-    # same driver traffic as the reference's takeOrdered merge)
-    d2_rows = phase1.select(dist2(cols, q).alias("d2")).collect()
-    if len(d2_rows) < k:
-        # bucket counts promised >= k rows but null coordinates left
-        # phase 1 short — its max distance is NOT a kth-NN bound, so
-        # pruning with it could drop true neighbors; scan exactly
-        return _knn_scan(lay.pruned_scan(None), cols, q, k, tiebreak)
-    theta2 = max(r["d2"] for r in d2_rows)
-    theta = theta2 ** 0.5
-
-    # phase 2: if no other bucket's box can hold a closer-or-tied point,
-    # phase 1 is final; else rescan the ball box via its z-cover
-    others_reach = any(
-        _bounds_mindist2(b, cols, q) <= theta2
-        for b in ranked
-        if int(b["zb"]) not in set(sel_zbs)
-    )
-    if not others_reach:
-        return phase1
-    ball_lo = [c - theta for c in q]
-    ball_hi = [c + theta for c in q]
-    ranges = lay.z_ranges_for_box(ball_lo, ball_hi)
-    return _knn_scan(lay.pruned_scan(ranges), cols, q, k, tiebreak)
 
 
 # ---------------------------------------------------------------------------

@@ -5,19 +5,16 @@ The reference engine's predicates are Euclidean
 (ref: src/main/scala/org/apache/spark/sql/simba/spatial/Point.scala —
 minDist is L2); real-world location columns are WGS-84 degrees, where
 L2 over (lat, lon) distorts with latitude and breaks at the antimeridian.
-This module is the spherical counterpart of `operators/filters.py` /
-`operators/distance_join.py`: the same plan shapes (sargable
-prefilter → exact refine; grid-cell equi-join → exact refine), with
-great-circle arithmetic.
+This module supplies the spherical metric: haversine distance, the
+banded grid join, the lat/lon ball boxes and the sample θ estimate.
+The kNN programs themselves exist once, for both metrics:
 
-Scale design mirrors the Euclidean family:
 - `geo_circle_range`: a SARGABLE bounding-box prefilter (lat between,
-  lon between — pushed to Parquet row groups) guards the exact
-  haversine refine; the box handles antimeridian wrap (two lon ranges)
-  and polar caps (lon filter dropped) instead of silently missing
-  rows.
-- `geo_knn`: exact global top-k by haversine — TakeOrderedAndProject,
-  k rows to the driver.
+  lon between — pushed to Parquet row groups; the boxes of
+  `_geo_ball_boxes`, which handle antimeridian wrap as two lon ranges
+  and polar caps as a full-lon box) guards the exact haversine refine.
+- `geo_knn`: :func:`.filters._knn_select` — exact global top-k, and the
+  two-phase bound-and-prune over a routable layout.
 - `geo_distance_join`: latitude-banded grid blocking. Bands are
   `radius`-tall; within band b the lon cell width is derived FROM THE
   BAND INDEX (at the band's max |lat|, clamped at 89.9°), so both
@@ -26,6 +23,9 @@ Scale design mirrors the Euclidean family:
   to its 3×3 cell neighborhood (wrap via modulo); the right side
   keys each row once, so every candidate pair is emitted exactly once
   — one equi-join + exact haversine refine, no cartesian anywhere.
+- `geo_knn_join`: :func:`.knn_join._theta_knn_join` with
+  `geo_distance_join` as its candidate join.
+- the stream-static kNN join is ``streaming.ops._static_knn``.
 
 All arithmetic is plain Column math (radians/sin/cos/asin/sqrt) —
 codegen'd, engine-portable, mirrored term-for-term by the SQL
@@ -95,24 +95,9 @@ def geo_circle_range(
     r = float(radius_km)
     if r < 0:
         raise ValueError("radius_km must be >= 0")
-    dlat = r / _KM_PER_DEG
+    boxes = _geo_ball_boxes((clat, clon), r)
     lat = F.col(lat_col).cast("double")
     lon = F.col(lon_col).cast("double")
-    lat_lo, lat_hi = clat - dlat, clat + dlat
-    # (lon_lo, lon_hi) boxes; None = the full circle of longitudes
-    boxes = [(-180.0, 180.0)]
-    if abs(clat) + dlat < _MAX_BAND_LAT:
-        dlon = r / (_KM_PER_DEG *
-                    math.cos(math.radians(min(abs(clat) + dlat,
-                                              _MAX_BAND_LAT))))
-        lo, hi = clon - dlon, clon + dlon
-        if dlon < 180.0:
-            if lo < -180.0:
-                boxes = [(lo + 360.0, 180.0), (-180.0, hi)]
-            elif hi > 180.0:
-                boxes = [(lo, 180.0), (-180.0, hi - 360.0)]
-            else:
-                boxes = [(lo, hi)]
     dist = haversine_km(lat, lon, F.lit(clat), F.lit(clon))
     if registry is not None:
         from .filters import range_query
@@ -120,16 +105,17 @@ def geo_circle_range(
         parts = [
             range_query(df, [lat_col, lon_col], (lat_lo, blo),
                         (lat_hi, bhi), registry=registry)
-            for blo, bhi in boxes
+            for lat_lo, lat_hi, blo, bhi in boxes
         ]
         pre_df = parts[0]
         for p in parts[1:]:
             pre_df = pre_df.unionByName(p)
         return pre_df.filter(dist <= r)
+    lat_lo, lat_hi = boxes[0][:2]
     pre = lat.between(lat_lo, lat_hi)
-    if boxes != [(-180.0, 180.0)]:
+    if [bx[2:] for bx in boxes] != [(-180.0, 180.0)]:
         cond = None
-        for blo, bhi in boxes:
+        for _, _, blo, bhi in boxes:
             c = lon.between(blo, bhi)
             cond = c if cond is None else (cond | c)
         pre = pre & cond
@@ -148,45 +134,24 @@ def geo_knn(
 ) -> DataFrame:
     """Exact k nearest rows to ``center`` by great-circle distance —
     TakeOrderedAndProject (k rows cross the wire), deterministic with
-    a ``tiebreak`` column.
+    a ``tiebreak`` column; the distance rides in ``out_col``.
 
     With ``registry`` and a registered (lat, lon) z-order layout, the
-    two-phase bound-and-prune of the Euclidean indexed kNN runs
-    instead (same shape as filters._knn_via_layout, spherical
-    metric): phase 1 answers kNN over the smallest bucket prefix (by
-    a spherical lower bound on box distance) holding >= k rows; its
-    kth haversine distance θ prunes the final scan to the z-cover of
-    the θ-ball's lat/lon box (antimeridian wrap = union of two
-    covers, polar cap = full-lon box). Only k distances reach the
-    driver; pruned buckets cost no I/O."""
-    clat, clon = float(center[0]), float(center[1])
-    lay = registry.layout_for(df) if registry is not None else None
-    if (
-        lay is not None
-        and lay.kind == "zorder"
-        and [lat_col, lon_col] == lay.cols
-        and lay.bounds
-        and lay.bits > 0
-    ):
-        return _geo_knn_via_layout(lay, lat_col, lon_col,
-                                   (clat, clon), k, tiebreak, out_col)
-    return _geo_knn_scan(df, lat_col, lon_col, (clat, clon), k,
-                         tiebreak, out_col)
+    two-phase bound-and-prune of :func:`.filters._knn_select` runs with
+    the spherical metric: buckets order by a spherical lower bound on
+    box distance, and the θ-ball's z-cover is that of its lat/lon boxes
+    (antimeridian wrap = union of two covers, polar cap = full-lon box).
+    """
+    from .filters import _SelectMetric, _knn_select
 
-
-def _geo_knn_scan(df, lat_col, lon_col, center, k, tiebreak, out_col):
-    clat, clon = center
-    d = haversine_km(F.col(lat_col).cast("double"),
-                     F.col(lon_col).cast("double"),
-                     F.lit(clat), F.lit(clon))
-    order = [F.col(out_col).asc()]
-    if tiebreak is not None:
-        order.append(F.col(tiebreak).asc())
-    return (
-        df.withColumn(out_col, d)
-        .filter(F.col(out_col).isNotNull())
-        .orderBy(*order).limit(int(k))
-    )
+    q = (float(center[0]), float(center[1]))
+    dist = haversine_km(F.col(lat_col).cast("double"),
+                        F.col(lon_col).cast("double"),
+                        F.lit(q[0]), F.lit(q[1]))
+    metric = _SelectMetric(dist, lambda b: _geo_bounds_min_km(b, q),
+                           lambda lay, theta: _geo_ball_cover(lay, q, theta))
+    return _knn_select(df, [lat_col, lon_col], metric, out_col, k, tiebreak,
+                       registry, keep_dist=True)
 
 
 def _geo_bounds_min_km(bounds_row, q):
@@ -221,9 +186,10 @@ def _geo_bounds_min_km(bounds_row, q):
 
 
 def _geo_ball_boxes(center, radius_km):
-    """The θ-ball's sargable lat/lon boxes (shared rule with
-    geo_circle_range): [(lat_lo, lat_hi, lon_lo, lon_hi), ...] —
-    two boxes across the antimeridian, full-lon box near a pole."""
+    """The sargable lat/lon boxes of a great-circle ball (the box rule
+    of geo_circle_range and of geo_knn's θ-ball):
+    [(lat_lo, lat_hi, lon_lo, lon_hi), ...] — two boxes across the
+    antimeridian, full-lon box near a pole."""
     clat, clon = center
     r = float(radius_km)
     dlat = r / _KM_PER_DEG
@@ -244,52 +210,16 @@ def _geo_ball_boxes(center, radius_km):
     return [(lat_lo, lat_hi, blo, bhi) for blo, bhi in boxes]
 
 
-def _geo_knn_via_layout(lay, lat_col, lon_col, center, k, tiebreak,
-                        out_col):
-    """Two-phase spherical bound-and-prune over a (lat, lon) z-order
-    layout — the geo mirror of filters._knn_via_layout (ref:
-    IndexedRelationScan.scala:117-151, spherical metric)."""
-    k = int(k)
-    q = center
-    ranked = sorted(lay.bounds, key=lambda b: _geo_bounds_min_km(b, q))
-    sel, acc = [], 0
-    for b in ranked:
-        sel.append(b)
-        acc += int(b["count"])
-        if acc >= k:
-            break
-    if acc < k or len(sel) == len(ranked):
-        return _geo_knn_scan(lay.pruned_scan(None), lat_col, lon_col,
-                             q, k, tiebreak, out_col)
-    sel_zbs = [int(b["zb"]) for b in sel]
-    phase1 = _geo_knn_scan(
-        lay.pruned_scan(lay.z_ranges_for_buckets(sel_zbs)),
-        lat_col, lon_col, q, k, tiebreak, out_col)
-    d_rows = phase1.select(out_col).collect()
-    if len(d_rows) < k:
-        # selected buckets held >= k rows by count but < k usable
-        # (null-coordinate) distances — no valid θ bound; scan exactly
-        return _geo_knn_scan(lay.pruned_scan(None), lat_col, lon_col,
-                             q, k, tiebreak, out_col)
-    theta = max(r[out_col] for r in d_rows)
-
-    others_reach = any(
-        _geo_bounds_min_km(b, q) <= theta
-        for b in ranked
-        if int(b["zb"]) not in set(sel_zbs)
-    )
-    if not others_reach:
-        return phase1
+def _geo_ball_cover(lay, center, radius_km):
+    """Z-cover of the θ-ball's lat/lon boxes over a (lat, lon) layout;
+    None when a box spans the whole domain (nothing to prune)."""
     ranges = []
-    for lat_lo, lat_hi, lon_lo, lon_hi in _geo_ball_boxes(q, theta):
+    for lat_lo, lat_hi, lon_lo, lon_hi in _geo_ball_boxes(center, radius_km):
         rs = lay.z_ranges_for_box([lat_lo, lon_lo], [lat_hi, lon_hi])
         if rs is None:
-            # a θ-ball box spanning the whole domain prunes nothing
-            ranges = None
-            break
+            return None
         ranges.extend(rs)
-    return _geo_knn_scan(lay.pruned_scan(ranges), lat_col, lon_col,
-                         q, k, tiebreak, out_col)
+    return ranges
 
 
 def _band_width_deg(band, radius_km: float):
@@ -479,50 +409,7 @@ def _geo_estimate_theta(left_sample, right_sample, k: int,
     # asin form (accurate near 0, unlike arccos)
     kth_km = 2.0 * EARTH_RADIUS_KM * np.arcsin(
         np.sqrt(np.maximum(0.0, (1.0 - kth_cos) / 2.0)))
-    theta = float(np.quantile(kth_km, 0.95) * margin)
-    return min(theta, math.pi * EARTH_RADIUS_KM)
-
-
-def _geo_bounded_round(lp, rp, theta, k, lid, lat_l, lon_l, lat_r,
-                       lon_r, rtb, out_col):
-    """One θ-bounded candidate round over the banded grid
-    (:func:`geo_distance_join`), per-left top-k window with the
-    candidate count riding along; split into exact rows (>= k
-    candidates — their true kth-NN dist <= θ and the grid is
-    exhaustive within θ) and deficient ids. Skinny key-only frames
-    when a unique right key exists, same as knn_join._bounded_round."""
-    skinny = rtb is not None
-    if skinny:
-        lj = lp.select(*dict.fromkeys([lid, lat_l, lon_l]))
-        rj = rp.select(*dict.fromkeys([rtb, lat_r, lon_r]))
-    else:
-        lj, rj = lp, rp
-    cand = geo_distance_join(
-        lj, rj, theta, lat_l=lat_l, lon_l=lon_l, lat_r=lat_r,
-        lon_r=lon_r, out_col=out_col)
-    order = [F.col(out_col).asc()] + ([F.col(rtb).asc()] if rtb else [])
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(lid).orderBy(*order)
-    wall = Window.partitionBy(lid)
-    ranked = (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .withColumn("__cnt", F.count(F.lit(1)).over(wall))
-        .filter(F.col("__rn") <= int(k))
-    )
-    if skinny:
-        ranked = ranked.select(lid, rtb, out_col, "__cnt")
-    ranked = ranked.localCheckpoint(eager=True)
-    ok = ranked.filter(F.col("__cnt") >= k).drop("__rn", "__cnt")
-    if skinny:
-        ok = (
-            ok.join(lp, on=lid, how="inner")
-            .join(rp, on=rtb, how="inner")
-            .select(*lp.columns, *rp.columns, out_col)
-        )
-    ok_ids = ranked.filter(F.col("__cnt") >= k).select(lid).distinct()
-    retry_ids = lp.select(lid).join(ok_ids, on=lid, how="left_anti")
-    return ok, retry_ids
+    return float(np.quantile(kth_km, 0.95) * margin)
 
 
 def geo_knn_join(
@@ -547,17 +434,11 @@ def geo_knn_join(
     """For each left row, exactly-k nearest right rows by great-circle
     distance — the spherical RKJSpark analog (ref:
     src/main/scala/org/apache/spark/sql/simba/execution/join/RKJSpark.scala:105-141,
-    same θ-bound no-false-dismissal shape, spherical metric).
-
-    Program (mirrors operators.knn_join):
-    - θ from driver-side hash samples (kth-NN haversine quantile ×
-      margin; exactness never depends on θ, only performance does);
-    - one banded-grid candidate round at θ: a left row with >= k
-      candidates within θ has its exact answer (grid is exhaustive
-      within θ);
-    - deficient rows escalate (θ×4 grid retry, then a bounded cross);
-    - a broadcast-small right side routes to BNL + in-place window,
-      zero pair shuffle.
+    same θ-bound no-false-dismissal shape, spherical metric): the
+    :func:`.knn_join._theta_knn_join` program with the banded grid
+    (:func:`geo_distance_join`) as its candidate join, the chord-trick
+    θ estimate over 512 left probes, and θ capped at half the
+    circumference (πR), past which every pair is a candidate.
 
     ``right_tiebreak`` must be a UNIQUE right key (as in
     :func:`.knn_join.knn_join`): it both makes tie order deterministic
@@ -565,9 +446,8 @@ def geo_knn_join(
     join-back joins on it — a non-unique tiebreak would multiply
     result rows there.
     """
-    from .knn_join import (_bnl_pairs_ok, _broadcast_cap, _hash_sample,
-                           _plan_bytes, _spread, _topk)
     from .distance_join import _prefix_columns, _session_algo
+    from .knn_join import _JoinMetric, _broadcast_cap, _theta_knn_join
 
     if left_id is None:
         raise ValueError("geo_knn_join requires left_id (unique left key)")
@@ -580,85 +460,26 @@ def geo_knn_join(
     lid = left_prefix + left_id
     lat_l, lon_l = left_prefix + lat_l, left_prefix + lon_l
     lat_r, lon_r = right_prefix + lat_r, right_prefix + lon_r
-    overlap = set(lp.columns) & set(rp.columns)
-    if overlap:
-        raise ValueError(
-            f"geo_knn_join: overlapping output columns {sorted(overlap)}"
-            " — disambiguate with left_prefix/right_prefix")
     rtb = right_prefix + right_tiebreak if right_tiebreak else None
-    dist = haversine_km(
-        F.col(lat_l).cast("double"), F.col(lon_l).cast("double"),
-        F.col(lat_r).cast("double"), F.col(lon_r).cast("double"))
-
-    if algo == "cross":
-        pairs = _spread(lp).crossJoin(rp).withColumn(out_col, dist)
-        return _topk(pairs, lid, k, F.col(out_col), rtb)
-    if algo == "bounded" and _plan_bytes(rp) <= _broadcast_cap(rp) \
-            and _bnl_pairs_ok(lp, rp):
-        algo = "broadcast"
-    if algo == "broadcast":
-        n = int(lp.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "200"))
-        pairs = (
-            lp.repartition(n, F.col(lid))
-            .crossJoin(F.broadcast(rp))
-            .withColumn(out_col, dist)
-        )
-        return _topk(pairs, lid, k, F.col(out_col), rtb)
-    if algo not in ("bounded", "theta"):
-        raise ValueError(f"unknown geo-knn-join algo: {algo}")
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        rs_f = pool.submit(_hash_sample, rp, [lat_r, lon_r],
-                           sample_cap, seed)
+    m = _JoinMetric(
+        [lat_l, lon_l], [lat_r, lon_r],
+        haversine_km(
+            F.col(lat_l).cast("double"), F.col(lon_l).cast("double"),
+            F.col(lat_r).cast("double"), F.col(lon_r).cast("double")),
+        out_col,
+        candidates=lambda lj, rj, theta: geo_distance_join(
+            lj, rj, theta, lat_l=lat_l, lon_l=lon_l, lat_r=lat_r,
+            lon_r=lon_r, out_col=out_col),
+        estimate_theta=_geo_estimate_theta,
         # 512 left probes: the 95th-quantile kth-NN estimate is stable
         # to ~2% at this size, well inside theta_margin — and the
         # driver-side pairwise pass scales linearly in it
-        ls_f = pool.submit(_hash_sample, lp, [lat_l, lon_l],
-                           512, seed + 1)
-        rs, ls = rs_f.result(), ls_f.result()
-    theta = _geo_estimate_theta(ls, rs, k, margin=theta_margin)
-    if not math.isfinite(theta):
-        pairs = _spread(lp).crossJoin(rp).withColumn(out_col, dist)
-        return _topk(pairs, lid, k, F.col(out_col), rtb)
-
-    ok1, retry_ids = _geo_bounded_round(
-        lp, rp, theta, k, lid, lat_l, lon_l, lat_r, lon_r, rtb, out_col)
-    small_cap = 1024
-    head = retry_ids.take(small_cap + 1)
-    if len(head) == 0:
-        return ok1
-    if len(head) <= small_cap:
-        ids = [r[0] for r in head]
-        lp2 = lp.filter(F.col(lid).isin(ids))
-        retry_pairs = _spread(lp2).crossJoin(rp) \
-            .withColumn(out_col, dist)
-        retry_topk = _topk(retry_pairs, lid, k, F.col(out_col), rtb)
-        return ok1.unionByName(retry_topk)
-
-    lp_retry = lp.join(retry_ids, on=lid, how="left_semi")
-    ok2, retry2_ids = _geo_bounded_round(
-        lp_retry, rp, min(theta * 4.0, math.pi * EARTH_RADIUS_KM), k,
-        lid, lat_l, lon_l, lat_r, lon_r, rtb, out_col)
-    n_retry2 = retry2_ids.count()
-    result = ok1.unionByName(ok2)
-    if n_retry2 == 0:
-        return result
-    if n_retry2 > cross_warn_rows:
-        import warnings
-
-        warnings.warn(
-            f"geo_knn_join: {n_retry2} left rows still deficient after "
-            f"θ×4 retry — falling back to a {n_retry2}×|right| cross "
-            "join; consider a larger sample_cap/theta_margin",
-            RuntimeWarning,
-        )
-    lp2 = lp.join(retry2_ids, on=lid, how="left_semi")
-    retry_pairs = _spread(lp2).crossJoin(rp).withColumn(out_col, dist)
-    retry_topk = _topk(retry_pairs, lid, k, F.col(out_col), rtb)
-    return result.unionByName(retry_topk)
+        left_sample=512,
+        theta_max=math.pi * EARTH_RADIUS_KM,
+    )
+    return _theta_knn_join(
+        "geo_knn_join", m, lp, rp, k, lid, rtb, algo, _broadcast_cap(rp),
+        sample_cap, seed, theta_margin, cross_warn_rows)
 
 
 def _band_width_deg_sql(band_expr: str, radius_km: float) -> str:

@@ -8,19 +8,21 @@ replication + local R-tree, ref: RKJSpark.scala:37-145), VKJSpark
 Ties are broken arbitrarily, output exactly k (``keepSame=false``).
 For hash-matched determinism we order by (dist, right_id).
 
-Our router:
+Our router (:func:`_theta_knn_join`, the one kNN join program for both
+metrics — ``geo.geo_knn_join`` runs it with the spherical metric):
 
 - ``cross``   (CKJSpark parity): crossJoin + window row_number <= k.
   The oracle algorithm; O(|L|·|R|) pairs.
-- ``bounded`` (default; RKJSpark analog): candidate pairs from a grid
-  distance-join with radius θ estimated from a driver-side sample, then
-  window top-k; left rows with fewer than k candidates (θ too small —
-  possible since the estimate is sample-based) escalate through a
-  θ×4 grid retry and only then a cross join bounded to the remaining
-  rows (warned above `cross_warn_rows`). The union is exact — same
-  no-false-dismissal guarantee as RKJSpark's θ bound
+- ``bounded`` (default; RKJSpark analog): candidate pairs from the
+  metric's distance join at radius θ estimated from driver-side
+  samples, then window top-k; left rows with fewer than k candidates
+  (θ too small — possible since the estimate is sample-based) escalate
+  through a θ×4 retry and only then a cross join bounded to the
+  remaining rows (warned above `cross_warn_rows`). The union is exact —
+  same no-false-dismissal guarantee as RKJSpark's θ bound
   (ref: RKJSpark.scala:105-110), enforced by verification instead of a
   worst-case bound, which keeps θ (and the shuffle volume) tight.
+  A broadcast-small right side routes to the block nested loop.
 - ``voronoi`` (VKJSpark analog, exact): pivot-cell partitioning with
   triangle-inequality θ bounds and lossless right-row replication —
   see :func:`_voronoi_knn_join` (ref: VKJSpark.scala:38-398).
@@ -44,9 +46,10 @@ from __future__ import annotations
 
 import math
 import random
-from typing import Optional, Sequence
+from dataclasses import dataclass
+from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import dist2_cols
@@ -68,6 +71,33 @@ def _topk(
         .filter(F.col("__rn") <= int(k))
         .drop("__rn")
     )
+
+
+def _cross_topk(m, lp, rp, lid, k, rtb) -> DataFrame:
+    """Exact top-k over every (left, right) pair (CKJSpark). A cartesian
+    inherits the (often tiny) child partitioning; spreading the left lets
+    the pair stream and the per-left window parallelize."""
+    pairs = _spread(lp).crossJoin(rp).withColumn(m.out, m.dist)
+    return _topk(pairs, lid, k, F.col(m.out), rtb)
+
+
+@dataclass(frozen=True)
+class _JoinMetric:
+    """One metric's share of the θ kNN join, over prefixed columns."""
+
+    lcols: list
+    rcols: list
+    #: pairwise distance, and the output column it lands in
+    dist: Column
+    out: str
+    #: (left, right, θ) -> every pair within θ, with ``out`` attached
+    candidates: Callable
+    #: (left sample, right sample, k, margin) -> θ; inf on an empty side
+    estimate_theta: Callable
+    #: left probes for the estimate
+    left_sample: int
+    #: no θ beyond this can widen the candidate set
+    theta_max: float = math.inf
 
 
 def knn_join(
@@ -118,13 +148,48 @@ def knn_join(
     rcols = [f"{right_prefix}{c}" for c in right_cols]
     rtb = f"{right_prefix}{right_tiebreak}" if right_tiebreak else None
     dist = F.sqrt(dist2_cols(lcols, rcols))
-
-    if algo == "cross":
-        # a cartesian inherits the (often tiny) child partitioning; spread
-        # the left so the pair stream and the per-left window parallelize
-        pairs = _spread(lp).crossJoin(rp).withColumn("dist", dist)
-        return _topk(pairs, lid, k, F.col("dist"), rtb)
+    m = _JoinMetric(
+        lcols, rcols, dist, "dist",
+        candidates=lambda lj, rj, theta: distance_join(
+            lj, rj, lcols, rcols, theta,
+            algo="grid", left_prefix="", right_prefix="",
+        ).withColumn("dist", dist),
+        estimate_theta=_estimate_theta,
+        left_sample=2000,
+    )
     cap = float(broadcast_bytes) if broadcast_bytes is not None else _broadcast_cap(rp)
+    return _theta_knn_join(
+        "knn_join", m, lp, rp, k, lid, rtb, algo, cap,
+        sample_cap, seed, theta_margin, cross_warn_rows,
+        voronoi=lambda: _voronoi_knn_join(
+            m, lp, rp, k, lid, rtb,
+            n_pivots=n_pivots, sample_cap=sample_cap, seed=seed,
+        ),
+    )
+
+
+def _theta_knn_join(op, m, lp, rp, k, lid, rtb, algo, cap, sample_cap, seed,
+                    theta_margin, cross_warn_rows, voronoi=None):
+    """The kNN join program behind ``op`` under metric ``m``, over
+    prefixed frames. Routes:
+
+    - ``cross``: every pair, window top-k (the oracle algorithm);
+    - ``broadcast``, or ``bounded`` when the right side is under ``cap``
+      bytes and |L|·|R| under the pair budget: block nested loop;
+    - ``voronoi``, or ``bounded`` from ``simba_spark.knnjoin.
+      voronoi_min_dim`` dimensions on: the ``voronoi`` callable, where
+      the metric has one;
+    - ``bounded`` / ``theta``: one θ-bounded candidate round
+      (:func:`_bounded_round`), θ estimated from hash samples of both
+      sides, then the escalation ladder for the deficient left rows.
+    """
+    overlap = set(lp.columns) & set(rp.columns)
+    if overlap:
+        raise ValueError(
+            f"{op}: overlapping output columns {sorted(overlap)}"
+            " — disambiguate with left_prefix/right_prefix")
+    if algo == "cross":
+        return _cross_topk(m, lp, rp, lid, k, rtb)
     if algo == "bounded" and _plan_bytes(rp) <= cap and _bnl_pairs_ok(lp, rp):
         # cost-based route (BKJSpark rationale): a broadcast-small right
         # side doesn't need θ machinery at all — the broadcast plan below
@@ -146,10 +211,13 @@ def knn_join(
         pairs = (
             lp.repartition(n, F.col(lid))
             .crossJoin(F.broadcast(rp))
-            .withColumn("dist", dist)
+            .withColumn(m.out, m.dist)
         )
-        return _topk(pairs, lid, k, F.col("dist"), rtb)
-    if algo == "bounded" and len(lcols) >= _voronoi_min_dim(lp):
+        return _topk(pairs, lid, k, F.col(m.out), rtb)
+    if voronoi is not None and (
+        algo == "voronoi"
+        or (algo == "bounded" and len(m.lcols) >= _voronoi_min_dim(lp))
+    ):
         # high-dimension route: the θ grid program replicates ~2^d
         # cells per row and the z-value guard (d·bits <= 63) collapses
         # per-dimension resolution as d grows, so past d≈6 grid
@@ -157,18 +225,13 @@ def knn_join(
         # Voronoi program is dimension-agnostic (ref parity: Point is
         # N-dim, Point.scala:28-29; VKJSpark is the reference's own
         # high-d kNN-join answer).
-        algo = "voronoi"
-    if algo == "voronoi":
-        return _voronoi_knn_join(
-            lp, rp, lcols, rcols, k, lid, dist, rtb,
-            n_pivots=n_pivots, sample_cap=sample_cap, seed=seed,
-        )
+        return voronoi()
     # 'theta' = the θ-bounded program unconditionally (no cost routing) —
     # same semantics as 'bounded', kept addressable for tests/tuning
     if algo not in ("bounded", "theta"):
-        raise ValueError(f"unknown knn-join algo: {algo}")
+        raise ValueError(f"unknown {op.replace('_', '-')} algo: {algo}")
 
-    # --- θ estimation from a driver-side sample of the right key columns.
+    # --- θ estimation from driver-side samples of the key columns.
     # Sample ⊆ right ⇒ for any point p, kth-NN-dist(p, sample) >=
     # kth-NN-dist(p, right): a radius that captures k sample points
     # captures >= k real candidates *for the sampled region*. We take a
@@ -181,23 +244,23 @@ def knn_join(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        rs_f = pool.submit(_hash_sample, right, right_cols, sample_cap, seed)
-        ls_f = pool.submit(_hash_sample, left, left_cols, 2000, seed + 1)
+        rs_f = pool.submit(_hash_sample, rp, m.rcols, sample_cap, seed)
+        ls_f = pool.submit(_hash_sample, lp, m.lcols, m.left_sample, seed + 1)
         rs, ls = rs_f.result(), ls_f.result()
-    theta = _estimate_theta(ls, rs, k, margin=theta_margin)
+    theta = m.estimate_theta(ls, rs, k, theta_margin)
     if not math.isfinite(theta):
         # degenerate inputs (an empty side) — candidate generation has
         # nothing to bound; the cross path settles it
-        pairs = _spread(lp).crossJoin(rp).withColumn("dist", dist)
-        return _topk(pairs, lid, k, F.col("dist"), rtb)
+        return _cross_topk(m, lp, rp, lid, k, rtb)
+    theta = min(theta, m.theta_max)
 
     # if a left row has >= k candidates within θ, its true kth-NN dist
-    # <= θ, and the grid join is exhaustive within θ — so the windowed
-    # top-k over its candidates IS its exact answer. Rows below k
-    # candidates escalate: θ×4 grid retry, then (rarely) a bounded
-    # cross join. Same no-false-dismissal guarantee as RKJSpark's θ
-    # bound (ref: RKJSpark.scala:105-141), enforced per-row.
-    ok1, retry_ids = _bounded_round(lp, rp, lcols, rcols, theta, k, lid, dist, rtb)
+    # <= θ, and the candidate join is exhaustive within θ — so the
+    # windowed top-k over its candidates IS its exact answer. Rows below
+    # k candidates escalate: θ×4 retry, then (rarely) a bounded cross
+    # join. Same no-false-dismissal guarantee as RKJSpark's θ bound
+    # (ref: RKJSpark.scala:105-141), enforced per-row.
+    ok1, retry_ids = _bounded_round(m, lp, rp, theta, k, lid, rtb)
     # deficient set size check with early stop: take() short-circuits the
     # scan at small_cap+1 rows (the common cases are 0 or a handful)
     small_cap = 1024
@@ -206,21 +269,18 @@ def knn_join(
         return ok1
     if len(head) <= small_cap:
         # bounded cross join directly — |deficient|·|R| pairs with
-        # |deficient| <= 1024; cheaper than spinning up a second grid
-        # round's shuffles for a handful of rows
-        ids = [r[0] for r in head]
-        lp2 = lp.filter(F.col(lid).isin(ids))
-        retry_pairs = _spread(lp2).crossJoin(rp).withColumn("dist", dist)
-        retry_topk = _topk(retry_pairs, lid, k, F.col("dist"), rtb)
-        return ok1.unionByName(retry_topk)
+        # |deficient| <= 1024; cheaper than spinning up a second
+        # candidate round's shuffles for a handful of rows
+        lp2 = lp.filter(F.col(lid).isin([r[0] for r in head]))
+        return ok1.unionByName(_cross_topk(m, lp2, rp, lid, k, rtb))
 
-    # escalation 1: widened-θ grid join over the deficient rows only.
-    # Shuffle/AQE semi-join (NOT a forced broadcast — the deficient set
-    # is unbounded when θ under-samples a skewed region; AQE picks
+    # escalation 1: widened-θ candidate round over the deficient rows
+    # only. Shuffle/AQE semi-join (NOT a forced broadcast — the deficient
+    # set is unbounded when θ under-samples a skewed region; AQE picks
     # broadcast iff it actually fits).
     lp_retry = lp.join(retry_ids, on=lid, how="left_semi")
     ok2, retry2_ids = _bounded_round(
-        lp_retry, rp, lcols, rcols, theta * 4.0, k, lid, dist, rtb
+        m, lp_retry, rp, min(theta * 4.0, m.theta_max), k, lid, rtb
     )
     n_retry2 = retry2_ids.count()
     result = ok1.unionByName(ok2)
@@ -233,20 +293,17 @@ def knn_join(
         import warnings
 
         warnings.warn(
-            f"knn_join: {n_retry2} left rows still deficient after θ×4 "
+            f"{op}: {n_retry2} left rows still deficient after θ×4 "
             f"retry — falling back to a {n_retry2}×|right| cross join; "
             "consider a larger sample_cap/theta_margin",
             RuntimeWarning,
         )
     lp2 = lp.join(retry2_ids, on=lid, how="left_semi")
-    retry_pairs = _spread(lp2).crossJoin(rp).withColumn("dist", dist)
-    retry_topk = _topk(retry_pairs, lid, k, F.col("dist"), rtb)
-    return result.unionByName(retry_topk)
+    return result.unionByName(_cross_topk(m, lp2, rp, lid, k, rtb))
 
 
 def _voronoi_knn_join(
-    lp, rp, lcols, rcols, k, lid, dist, rtb,
-    n_pivots: int, sample_cap: int, seed: int,
+    m, lp, rp, k, lid, rtb, n_pivots: int, sample_cap: int, seed: int,
 ):
     """VKJSpark analog (ref: VKJSpark.scala:38-398): pivot-cell
     partitioning + triangle-inequality replication, re-expressed as one
@@ -288,12 +345,11 @@ def _voronoi_knn_join(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        ls_f = pool.submit(_hash_sample, lp, lcols, sample_cap, seed + 11)
-        rs_f = pool.submit(_hash_sample, rp, rcols, sample_cap, seed + 12)
+        ls_f = pool.submit(_hash_sample, lp, m.lcols, sample_cap, seed + 11)
+        rs_f = pool.submit(_hash_sample, rp, m.rcols, sample_cap, seed + 12)
         sample = np.concatenate([ls_f.result(), rs_f.result()])
     if len(sample) == 0:
-        return _topk(_spread(lp).crossJoin(rp).withColumn("dist", dist),
-                     lid, k, F.col("dist"), rtb)
+        return _cross_topk(m, lp, rp, lid, k, rtb)
     P = min(int(n_pivots), len(sample))
     # greedy farthest-point (k-center): start at the sample centroid's
     # nearest point, repeatedly add the point farthest from the chosen set
@@ -346,8 +402,8 @@ def _voronoi_knn_join(
     # the exchange at scale where scans are already many-split
     from ..functions import parallelize_small
 
-    lc = with_cell_and_dist(parallelize_small(lp), lcols)
-    rc = with_cell_and_dist(parallelize_small(rp), rcols)
+    lc = with_cell_and_dist(parallelize_small(lp), m.lcols)
+    rc = with_cell_and_dist(parallelize_small(rp), m.rcols)
 
     # per-cell meta in ONE job over a tagged skinny union:
     # left: ub_i = max pivot dist; right: ub_j, count, k smallest pivot
@@ -376,8 +432,7 @@ def _voronoi_knn_join(
     }
     n_right = sum(m[1] for m in r_meta.values())
     if n_right == 0 or not l_ub:
-        return _topk(_spread(lp).crossJoin(rp).withColumn("dist", dist),
-                     lid, k, F.col("dist"), rtb)
+        return _cross_topk(m, lp, rp, lid, k, rtb)
 
     eps = 1e-9
     # θ_i per left cell (ref: VKJSpark.scala:315-328); with fewer than k
@@ -417,23 +472,23 @@ def _voronoi_knn_join(
         lc.drop("__pd")
         .join(rrep, on=F.col("__cell") == F.col("__lcell"), how="inner")
         .drop("__cell", "__lcell")
-        .withColumn("dist", dist)
+        .withColumn(m.out, m.dist)
     )
-    return _topk(pairs, lid, k, F.col("dist"), rtb)
+    return _topk(pairs, lid, k, F.col(m.out), rtb)
 
 
-def _bounded_round(lp, rp, lcols, rcols, theta, k, lid, dist, rtb):
-    """One θ-bounded candidate round: grid distance join over SKINNY
+def _bounded_round(m, lp, rp, theta, k, lid, rtb):
+    """One θ-bounded candidate round: ``m.candidates`` over SKINNY
     key-only frames, per-left top-k window with a candidate count riding
     along (single shuffle on lid), then split into exact rows (>= k
     candidates) and deficient ids.
 
     When a unique right key (`rtb`) exists, only (id, coords) rows enter
-    the grid explosion and the window sort — the wide payload columns
+    the candidate join and the window sort — the wide payload columns
     are fetched back by two equi-joins on the ≤ |L|·k survivors. At
     scale this is the difference between shuffling every column through
-    a ×(2^d) cell replication and shuffling 3 skinny columns (the
-    reference's RKJSpark replicates full rows, RKJSpark.scala:111-135).
+    a cell replication and shuffling 3 skinny columns (the reference's
+    RKJSpark replicates full rows, RKJSpark.scala:111-135).
 
     The ranked candidates are localCheckpoint'ed: materialized once for
     the two consumers, lineage truncated so downstream plans stay small,
@@ -441,15 +496,12 @@ def _bounded_round(lp, rp, lcols, rcols, theta, k, lid, dist, rtb):
     DataFrame is dropped — unlike a persist() that outlives the call."""
     skinny = rtb is not None
     if skinny:
-        lj = lp.select(*dict.fromkeys([lid, *lcols]))
-        rj = rp.select(*dict.fromkeys([rtb, *rcols]))
+        lj = lp.select(*dict.fromkeys([lid, *m.lcols]))
+        rj = rp.select(*dict.fromkeys([rtb, *m.rcols]))
     else:
         lj, rj = lp, rp
-    cand = distance_join(
-        lj, rj, lcols, rcols, theta,
-        algo="grid", left_prefix="", right_prefix="",
-    ).withColumn("dist", dist)
-    order = [F.col("dist").asc()] + ([F.col(rtb).asc()] if rtb else [])
+    cand = m.candidates(lj, rj, theta)
+    order = [F.col(m.out).asc()] + ([F.col(rtb).asc()] if rtb else [])
     w = Window.partitionBy(lid).orderBy(*order)
     wall = Window.partitionBy(lid)
     ranked = (
@@ -458,7 +510,7 @@ def _bounded_round(lp, rp, lcols, rcols, theta, k, lid, dist, rtb):
         .filter(F.col("__rn") <= int(k))
     )
     if skinny:
-        ranked = ranked.select(lid, rtb, "dist", "__cnt")
+        ranked = ranked.select(lid, rtb, m.out, "__cnt")
     ranked = ranked.localCheckpoint(eager=True)
     ok = ranked.filter(F.col("__cnt") >= k).drop("__rn", "__cnt")
     if skinny:
@@ -467,11 +519,11 @@ def _bounded_round(lp, rp, lcols, rcols, theta, k, lid, dist, rtb):
         ok = (
             ok.join(lp, on=lid, how="inner")
             .join(rp, on=rtb, how="inner")
-            .select(*lp.columns, *rp.columns, "dist")
+            .select(*lp.columns, *rp.columns, m.out)
         )
     ok_ids = ranked.filter(F.col("__cnt") >= k).select(lid).distinct()
     # one anti-join covers both deficient (< k candidates) and missing
-    # (zero candidates — absent from the grid join output entirely)
+    # (zero candidates — absent from the candidate join output entirely)
     retry_ids = lp.select(lid).join(ok_ids, on=lid, how="left_anti")
     return ok, retry_ids
 

@@ -427,6 +427,22 @@ class LayoutRegistry:
                         name = None
         return self._layouts.get(name) if name else None
 
+    def zorder_layout(self, df: DataFrame, cols, need_bounds: bool = True) -> Optional[Layout]:
+        """The layout z-interval routing can use for ``df`` queried on
+        ``cols``: a registered z-order layout on exactly those columns
+        with a z-curve (bits > 0) and, with ``need_bounds``, a bounds
+        table. None when the query must run on the plain scan."""
+        lay = self.layout_for(df)
+        if (
+            lay is None
+            or lay.kind != "zorder"
+            or list(cols) != lay.cols
+            or lay.bits <= 0
+            or (need_bounds and not lay.bounds)
+        ):
+            return None
+        return lay
+
     def circle_scan(self, df: DataFrame, cols, center, radius) -> Optional[DataFrame]:
         """Partition-covered short-circuit for circle queries
         (ref: Dist.furthest, spatial/Dist.scala:24-34, used at
@@ -438,14 +454,8 @@ class LayoutRegistry:
         test. Returns None when no bucket is fully covered — the caller
         falls back to the ordinary pruned scan, which already handles
         that case optimally."""
-        lay = self.layout_for(df)
-        if (
-            lay is None
-            or lay.kind != "zorder"
-            or list(cols) != lay.cols
-            or lay.bits <= 0
-            or not lay.bounds
-        ):
+        lay = self.zorder_layout(df, cols)
+        if lay is None:
             return None
         r = float(radius)
         ctr = [float(c) for c in center]
@@ -499,13 +509,8 @@ class LayoutRegistry:
         ``simba_spark.layout.selectivity_threshold`` (default 0.8) of the
         rows, pruning cannot skip meaningful I/O and the z-interval OR
         would be pure per-row overhead — fall back to the plain scan."""
-        lay = self.layout_for(df)
-        if (
-            lay is None
-            or lay.kind != "zorder"
-            or list(cols) != lay.cols
-            or lay.bits <= 0
-        ):
+        lay = self.zorder_layout(df, cols, need_bounds=False)
+        if lay is None:
             return df
         lo = [float(x) for x in low]
         hi = [float(x) for x in high]

@@ -2,7 +2,8 @@
 
 The planar distance joins key their grid cells with the batch kernel in
 :mod:`simba_spark.operators.distance_join`; the stream-static one IS the
-batch grid join.
+batch grid join. Both stream-static kNN joins (L2 and haversine) run
+the one kernel :func:`_static_knn`.
 """
 
 from __future__ import annotations
@@ -175,59 +176,25 @@ def streaming_knn_join(
     max_static_rows: int = 200_000,
 ) -> DataFrame:
     """Stream-static kNN join: each streaming point gets its k nearest
-    static reference points (exact; ties by `static_id`).
+    static reference points by L2 distance (exact; ties by `static_id`),
+    in output column ``dist`` — the :func:`_static_knn` kernel, sorting
+    on squared distance.
 
-    Physical shape: the static side is collected ONCE into an array of
-    (id, coords) structs and broadcast as a literal — per stream row the
-    top-k is `slice(array_sort(transform(...)), 1, k)` + explode, pure
-    JVM expressions with no per-batch shuffle and no streaming state.
-    This is the right plan when the reference set is dimension-sized
-    (sensor sites, POIs, centroids — the common streaming case);
+    The right plan when the reference set is dimension-sized (sensor
+    sites, POIs, centroids — the common streaming case);
     `max_static_rows` guards the driver collect. An unbounded static
     side should use :func:`streaming_distance_join` with a radius, or
     batch :func:`~simba_spark.operators.knn_join.knn_join` on a
     snapshot — kNN against 100 TB *per event* is not a streaming plan.
     """
-    k = int(k)
-    assert static_id is not None, "streaming_knn_join requires static_id"
-    d = len(stream_cols)
-    assert d == len(static_cols)
-    rows = (
-        static_df.select(static_id, *static_cols).limit(max_static_rows + 1).collect()
-    )
-    assert len(rows) <= max_static_rows, (
-        f"static side exceeds max_static_rows={max_static_rows}; "
-        "use streaming_distance_join or a batch knn_join snapshot"
-    )
-    ref = F.array(
-        *[
-            F.struct(
-                *[F.lit(float(r[c])).alias(f"d{i}") for i, c in enumerate(static_cols)],
-                F.lit(r[static_id]).alias("id"),
-            )
-            for r in rows
-        ]
-    )
-    # sort key (dist, id) gives deterministic tie order; array_sort on
-    # structs orders field-by-field
-    topk = F.slice(
-        F.array_sort(
-            F.transform(
-                ref,
-                lambda s: F.struct(
-                    _sdist2(s, stream_cols).alias("dist2"), s["id"].alias("id")
-                ),
-            )
-        ),
-        1,
-        k,
-    )
-    out = stream_df.withColumn("__nn", F.explode(topk))
-    return (
-        out.withColumn(f"{static_prefix}{static_id}", F.col("__nn.id"))
-        .withColumn("dist", F.sqrt(F.col("__nn.dist2")))
-        .drop("__nn")
-    )
+    if len(stream_cols) != len(static_cols):
+        raise ValueError(
+            "streaming_knn_join: stream_cols/static_cols dimension mismatch")
+    return _static_knn(
+        "streaming_knn_join", stream_df, static_df, k, static_id,
+        static_prefix, max_static_rows,
+        [(f"d{i}", c) for i, c in enumerate(static_cols)],
+        "dist2", lambda s: _sdist2(s, stream_cols), "dist", F.sqrt)
 
 
 def streaming_geo_knn_join(
@@ -246,16 +213,11 @@ def streaming_geo_knn_join(
     """Stream-static SPHERICAL kNN join: each streaming (lat, lon) row
     gets its k nearest static reference points by great-circle
     distance (exact; ties by ``static_id`` — the geo fleet-tracking
-    top-k the euclidean :func:`streaming_knn_join` can't answer).
-
-    Physical shape mirrors :func:`streaming_knn_join`: the static side
-    is collected ONCE into an array of (lat, lon, id) structs and
-    broadcast as a literal; per stream row the top-k is
-    ``slice(array_sort(transform(...)), 1, k)`` + explode — the
-    haversine runs inside the transform lambda, pure JVM expressions,
-    no per-batch shuffle and no streaming state. The per-element
-    struct sorts by (dist_km, id), the same deterministic tie order as
-    batch :func:`~simba_spark.operators.geo.geo_knn_join` with
+    top-k the euclidean :func:`streaming_knn_join` can't answer) — the
+    :func:`_static_knn` kernel with the haversine inside its lambda.
+    The per-element struct sorts by (dist_km, id), the same
+    deterministic tie order as batch
+    :func:`~simba_spark.operators.geo.geo_knn_join` with
     ``right_tiebreak=static_id`` — the distance arithmetic is
     term-identical, so replayed streams match the batch operator
     row-for-row.
@@ -271,38 +233,51 @@ def streaming_geo_knn_join(
     """
     from ..operators.geo import haversine_km
 
+    slat = F.col(lat_s).cast("double")
+    slon = F.col(lon_s).cast("double")
+    return _static_knn(
+        "streaming_geo_knn_join", stream_df, static_df, k, static_id,
+        static_prefix, max_static_rows, [("lat", lat_t), ("lon", lon_t)],
+        "dist_km", lambda s: haversine_km(slat, slon, s["lat"], s["lon"]),
+        out_col, lambda d: d)
+
+
+def _static_knn(op, stream_df, static_df, k, static_id, static_prefix,
+                max_static_rows, fields, key, key_of, out_col, out_of):
+    """The stream-static kNN kernel behind ``op``. The static side is
+    collected ONCE (at most ``max_static_rows``, else ValueError) into an
+    array literal of structs — ``fields`` names each static coordinate
+    column's struct field, ``id`` the ``static_id``. Per stream row the
+    top-k is ``slice(array_sort(transform(...)), 1, k)`` + explode over
+    (``key`` = ``key_of(struct)``, id) pairs — pure JVM expressions, no
+    per-batch shuffle, no streaming state; sorting on (key, id) gives a
+    deterministic tie order. Output: the stream row, the static id as
+    ``static_prefix + static_id`` and ``out_of(key)`` as ``out_col``."""
     if static_id is None:
-        raise ValueError("streaming_geo_knn_join requires static_id "
+        raise ValueError(f"{op} requires static_id "
                          "(unique static key; also the tiebreak)")
     k = int(k)
     rows = (
-        static_df.select(static_id, lat_t, lon_t)
+        static_df.select(static_id, *[c for _, c in fields])
         .limit(max_static_rows + 1).collect()
     )
     if len(rows) > max_static_rows:
         raise ValueError(
-            f"static side exceeds max_static_rows={max_static_rows}; "
-            "use streaming_geo_distance_join or a batch geo_knn_join "
-            "snapshot")
+            f"{op}: static side exceeds max_static_rows={max_static_rows}; "
+            f"use {op.replace('knn', 'distance')} or a batch "
+            f"{op[len('streaming_'):]} snapshot")
     ref = F.array(*[
         F.struct(
-            F.lit(float(r[lat_t])).alias("lat"),
-            F.lit(float(r[lon_t])).alias("lon"),
+            *[F.lit(float(r[c])).alias(f) for f, c in fields],
             F.lit(r[static_id]).alias("id"),
         )
         for r in rows
     ])
-    slat = F.col(lat_s).cast("double")
-    slon = F.col(lon_s).cast("double")
     topk = F.slice(
         F.array_sort(
             F.transform(
                 ref,
-                lambda s: F.struct(
-                    haversine_km(slat, slon, s["lat"], s["lon"])
-                    .alias("dist_km"),
-                    s["id"].alias("id"),
-                ),
+                lambda s: F.struct(key_of(s).alias(key), s["id"].alias("id")),
             )
         ),
         1,
@@ -311,7 +286,7 @@ def streaming_geo_knn_join(
     out = stream_df.withColumn("__nn", F.explode(topk))
     return (
         out.withColumn(f"{static_prefix}{static_id}", F.col("__nn.id"))
-        .withColumn(out_col, F.col("__nn.dist_km"))
+        .withColumn(out_col, out_of(F.col(f"__nn.{key}")))
         .drop("__nn")
     )
 

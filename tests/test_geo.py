@@ -2,6 +2,7 @@
 range (antimeridian + polar cases), banded-grid distance join vs
 brute force."""
 
+import contextlib
 import math
 import random
 
@@ -234,18 +235,29 @@ def _knn_want(lpts, rpts, k):
 
 
 @pytest.mark.parametrize("algo", ["bounded", "theta", "broadcast",
-                                  "cross"])
+                                  "cross", "ladder"])
 def test_geo_knn_join_matches_bruteforce(spark, algo):
     from simba_spark.operators.geo import geo_knn_join
 
-    lpts = _random_points(120, 21)
+    kw = {"algo": algo}
+    n_left = 120
+    walked = contextlib.nullcontext()
+    if algo == "ladder":
+        # θ at 1e-3 of its estimate leaves all of > 1024 left rows
+        # deficient: the join walks the θ×4 rung, then the bounded cross
+        # (cross_warn_rows=0 makes that last rung announce itself)
+        kw = {"algo": "theta", "theta_margin": 1e-3, "cross_warn_rows": 0}
+        n_left = 1030
+        walked = pytest.warns(RuntimeWarning, match="after θ×4 retry")
+    lpts = _random_points(n_left, 21)
     rpts = _random_points(150, 22)
     ldf = _pts(spark, lpts, "l")
     rdf = _pts(spark, rpts, "r")
-    got = {(x["l_id"], x["b_r_id"]) for x in
-           geo_knn_join(ldf, rdf, 3, left_id="l_id",
-                        right_tiebreak="r_id", algo=algo,
-                        right_prefix="b_").collect()}
+    with walked:
+        got = {(x["l_id"], x["b_r_id"]) for x in
+               geo_knn_join(ldf, rdf, 3, left_id="l_id",
+                            right_tiebreak="r_id", right_prefix="b_",
+                            **kw).collect()}
     assert got == _knn_want(lpts, rpts, 3), algo
 
 

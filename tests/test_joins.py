@@ -267,6 +267,35 @@ def test_knn_join_bounded_adversarial_skew(spark):
                            algo=algo, right_tiebreak="id"))
         assert got == want, algo
 
+    # θ at 1e-3 of its estimate leaves all of > 1024 left rows deficient:
+    # the join walks the θ×4 rung, then the bounded cross (announced by
+    # the cross_warn_rows=0 warning)
+    more = [(i, rng.gauss(0, 0.5), rng.gauss(0, 0.5)) for i in range(508, 1030)]
+    a2 = spark.createDataFrame(left_rows + more, "id long, x double, y double")
+    want2 = key(knn_join(a2, b, ["x", "y"], ["x", "y"], 4, left_id="id",
+                         algo="cross", right_tiebreak="id"))
+    with pytest.warns(RuntimeWarning, match="after θ×4 retry"):
+        got2 = key(knn_join(a2, b, ["x", "y"], ["x", "y"], 4, left_id="id",
+                            algo="theta", right_tiebreak="id",
+                            theta_margin=1e-3, cross_warn_rows=0))
+    assert got2 == want2
+
+
+@pytest.mark.parametrize("op", ["knn_join", "geo_knn_join"])
+def test_knn_joins_reject_overlapping_columns(spark, op):
+    """Unprefixed sides sharing a column name fail up front with the
+    operator's name, for both metrics of the θ kNN join program."""
+    from simba_spark.operators.geo import geo_knn_join
+
+    a = spark.createDataFrame([(1, 0.0, 0.0)], "id long, lat double, lon double")
+    b = spark.createDataFrame([(2, 1.0, 1.0)], "id long, lat double, lon double")
+    with pytest.raises(ValueError, match=f"^{op}: overlapping output columns"):
+        if op == "knn_join":
+            knn_join(a, b, ["lat", "lon"], ["lat", "lon"], 1, left_id="id",
+                     left_prefix="", right_prefix="", algo="theta")
+        else:
+            geo_knn_join(a, b, 1, left_id="id", algo="theta")
+
 
 def test_joins_generalize_to_3d(spark):
     """The reference's Point is N-dimensional (Point.scala:28-29); every

@@ -137,6 +137,40 @@ def test_layout_knn_prunes_partitions(spark):
     finally:
         ctx.drop_index("ev_prune_idx")
 
+@pytest.mark.parametrize("metric", ["l2", "sphere"])
+def test_layout_routed_knn_k0_returns_no_rows(lctx, points_df, metric):
+    """k=0 through a routable layout returns what the unrouted scan
+    returns — no rows — for both metrics of the shared two-phase
+    program (it used to take max() of an empty phase-1 θ)."""
+    from pyspark.sql import functions as F
+
+    from simba_spark.operators.filters import knn
+    from simba_spark.operators.geo import geo_knn
+
+    if metric == "l2":
+        df, cols = points_df, ["x", "y"]
+
+        def run(d, reg, k):
+            return knn(d, cols, (500.0, 500.0), k, tiebreak="id", registry=reg)
+    else:
+        df = points_df.select(
+            "id", (F.col("y") * 0.17 - 85.0).alias("lat"),
+            (F.col("x") * 0.36 - 180.0).alias("lon"))
+        cols = ["lat", "lon"]
+
+        def run(d, reg, k):
+            return geo_knn(d, "lat", "lon", (10.0, 20.0), k, tiebreak="id",
+                           registry=reg)
+    lay = lctx.create_index(df, cols, f"k0_{metric}_idx", kind="zorder")
+    try:
+        assert lctx.layouts.layout_for(lay.data) is lay
+        assert run(df, None, 0).collect() == []
+        assert run(lay.data, lctx.layouts, 0).collect() == []
+        assert run(lay.data, lctx.layouts, 3).collect() == run(df, None, 3).collect()
+    finally:
+        lctx.drop_index(f"k0_{metric}_idx")
+
+
 def test_selectivity_adaptive_scan(lctx, points_df):
     """A near-domain-wide box must fall back to the plain scan (pruning
     can't skip I/O; the z-interval OR would be pure overhead — ref:

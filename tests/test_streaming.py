@@ -316,14 +316,11 @@ def test_streaming_knn_join_guards_static_size(spark, stream_dir):
         F.lit(0.0).alias("py"),
     )
     src = spark.readStream.schema(schema).parquet(d)
-    try:
+    with pytest.raises(ValueError, match="max_static_rows"):
         streaming_knn_join(
             src, static, ["value", "user_id"], ["px", "py"], 2,
             static_id="poi_id", max_static_rows=10,
         )
-        assert False, "expected the static-size guard to trip"
-    except AssertionError as e:
-        assert "max_static_rows" in str(e)
 
 
 def test_streaming_geo_knn_join_matches_batch(spark):
